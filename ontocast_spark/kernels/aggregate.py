@@ -1,4 +1,4 @@
-"""Per-document entity/predicate canonicalization kernel (pure Python).
+"""Per-document entity/predicate canonicalization kernel.
 
 This is the deterministic heart of the engine: a faithful replay of the
 reference aggregator's semantics —
@@ -6,12 +6,21 @@ reference aggregator's semantics —
 triple model of :mod:`ontocast_spark.kernels.graphs`.
 
 It processes ONE document's chunks per call (the reference's
-disambiguation scope is a single document), so in Spark it runs inside
-``applyInPandas`` grouped by ``conv_id``: each group is small (a
-conversation's worth of triples) while the corpus-level parallelism is
-unbounded. The cross-document/scale variant (blocked candidate pairs +
-distributed connected components) lives in
-``ontocast_spark/operators/canonicalize.py``.
+disambiguation scope is a single document). In Spark it runs inside the
+fused ``mapInPandas`` task of ``operators/fused.py``, once per document
+as the task streams its ``conv_id``-sorted turns: each document is small
+(a conversation's worth of triples) while the corpus-level parallelism
+is unbounded. The cross-document/scale variant (blocked candidate pairs
++ distributed connected components) lives in
+``ontocast_spark/operators/crossdoc.py``.
+
+Entity grouping, the greedy O(n²) pair pass that dominates
+mega-documents, runs in C (``_group.c``, built and loaded by
+:mod:`.native` when this module is imported, so Spark's Python workers
+find it cached). :func:`_find_similar_entities_py` is the same pass in
+Python: the reference the tests compare against, and the path taken
+when the native kernel cannot be built or loaded. Everything else here
+is Python.
 
 Where the reference depends on rdflib set/dict iteration order (greedy
 pair grouping, tie-breaking argmax), this kernel imposes a deterministic
@@ -22,10 +31,14 @@ unaffected; reruns are bit-stable.
 
 from __future__ import annotations
 
+import sys
+from array import array
 from collections import defaultdict
 from dataclasses import dataclass, field
+from itertools import accumulate
 
 from .fuzz import cached_ratio
+from .native import load_group_entities
 from .rdfterms import (
     PROV_ENTITY,
     PROV_WAS_GENERATED_BY,
@@ -134,7 +147,7 @@ def _merge_pred_field(existing: PredicateMetadata, new: PredicateMetadata) -> No
         existing.is_explicit_property = True
 
 
-def find_similar_entities(
+def _find_similar_entities_py(
     entities: dict[str, EntityMetadata],
     entity_types: dict[str, set[str]],
 ) -> list[list[str]]:
@@ -192,6 +205,57 @@ def find_similar_entities(
         if len(group) > 1:
             groups.append(group)
     return groups
+
+
+_group_entities = load_group_entities()
+_UTF32 = "utf-32-le" if sys.byteorder == "little" else "utf-32-be"
+_WORD = (1 << 64) - 1
+
+
+def find_similar_entities(
+    entities: dict[str, EntityMetadata],
+    entity_types: dict[str, set[str]],
+) -> list[list[str]]:
+    """:func:`_find_similar_entities_py`'s groups, computed by one C call.
+
+    Python lowers the labels exactly as the loop does and passes them as
+    UTF-32 code points with offsets, the lowered local names as int ids,
+    and each entity's types as a bitset over the document's distinct
+    types (as many 64-bit words as needed). The C code returns each
+    entity's group leader; the groups are rebuilt here in the loop's
+    order (leaders ascending, members in insertion order)."""
+    if _group_entities is None:
+        return _find_similar_entities_py(entities, entity_types)
+    n = len(entities)
+    if n < 2:
+        return []
+    labels = []
+    name_ids: dict[str, int] = {}
+    lname = array("i")
+    type_ids: dict[str, int] = {}
+    type_masks = []
+    for e, m in entities.items():
+        labels.append(m.label.lower() if m.label is not None else "")
+        lname.append(name_ids.setdefault(m.local_name.lower(), len(name_ids)))
+        mask = 0
+        for t in entity_types.get(e) or ():
+            mask |= 1 << type_ids.setdefault(t, len(type_ids))
+        type_masks.append(mask)
+    offsets = array("q", [0, *accumulate(map(len, labels))])
+    words = max(1, (len(type_ids) + 63) // 64)
+    types = array("Q", [(mask >> (64 * k)) & _WORD
+                        for mask in type_masks for k in range(words)])
+    cps = "".join(labels).encode(_UTF32, "surrogatepass")
+    leader = array("i", bytes(4 * n))
+    rc = _group_entities(n, cps, offsets.buffer_info()[0], lname.buffer_info()[0],
+                         types.buffer_info()[0], words, SIMILARITY_THRESHOLD,
+                         SEMANTIC_THRESHOLD, leader.buffer_info()[0])
+    if rc != 0:
+        raise MemoryError("native entity grouping ran out of memory")
+    members: dict[int, list[str]] = {}
+    for e, lead in zip(entities, leader):
+        members.setdefault(lead, []).append(e)
+    return [g for g in members.values() if len(g) > 1]
 
 
 def _domain_range_compatible(a: PredicateMetadata, b: PredicateMetadata) -> bool:

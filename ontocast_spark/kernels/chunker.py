@@ -29,9 +29,12 @@ BREAKPOINT_PERCENTILE = 95.0
 MIN_CHUNK_SIZE = 2000
 MAX_CHUNK_SIZE = 20000
 
-# Markdown-aware sentence split (chunker.py:47-48)
+# Markdown-aware sentence split (chunker.py:47-48). The leading
+# ``(?=[\s#])`` only fails fast: every alternative needs a newline, a
+# whitespace or a ``#`` where it matches, so the matches are unchanged and
+# positions that cannot match skip the lookbehind alternatives.
 SENTENCE_SPLIT_RE = re.compile(
-    r"(?:(?:\n{2,}(?=#+))|(?:\n{2,}(?=- ))"
+    r"(?=[\s#])(?:(?:\n{2,}(?=#+))|(?:\n{2,}(?=- ))"
     r"|(?<=[a-z][.?!])\s+(?=\b[A-Z]\w{8,}\b)|(?<!#)(?=#+))"
 )
 

@@ -22,6 +22,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap_gb() -> int:
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return max(1, min(48, int(ram_gb / 2)))
+
+
 def build_spark(
     app_name: str = "ontocast-spark",
     master: str | None = None,
@@ -62,8 +67,11 @@ def build_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # local mode runs every task thread in the driver JVM — size the
         # heap for executor-grade work (128 GiB box; 48g leaves room for
-        # the 32 Python workers and tmpfs shuffle)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # the 32 Python workers and tmpfs shuffle), but never past half
+        # the machine's RAM: on a 15 GiB box a 48g cap let the test
+        # suite's JVM grow to 15 GB and be OOM-killed
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", f"{_default_heap_gb()}g"))
         .config("spark.ui.enabled", "false")
     )
     # shuffle spill to tmpfs when available: local-mode shuffle I/O on a

@@ -3,6 +3,9 @@
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+import re
+
+from ontocast_spark.kernels.chunker import SENTENCE_SPLIT_RE
 from ontocast_spark.kernels.fuzz import lcs_len, ratio
 from ontocast_spark.kernels.rdfterms import (
     clean_local_name,
@@ -91,3 +94,25 @@ def test_turtle_roundtrip_random(rows):
     ttl = serialize_turtle(triples, {"ex": "https://ex.com/"})
     parsed, _ = parse_turtle(ttl)
     assert set(parsed) == set(map(tuple, triples))
+
+
+# The sentence-split pattern before its fail-fast ``(?=[\s#])`` prefix: the
+# reference the current pattern must split identically to.
+OLD_SENTENCE_SPLIT_RE = re.compile(
+    r"(?:(?:\n{2,}(?=#+))|(?:\n{2,}(?=- ))"
+    r"|(?<=[a-z][.?!])\s+(?=\b[A-Z]\w{8,}\b)|(?<!#)(?=#+))"
+)
+# pieces that reach every alternative: blank lines before headings and
+# list items, sentence ends before long capitalised words, bare '#' runs
+_split_piece = st.sampled_from([
+    "\n", "\n\n", "\n\n\n", "#", "##", "- ", "-", " ", "  ", "\t", "\r",
+    "a", "z", "Q", ".", "?", "!", "word", "Abcdefghij", "Internationally",
+    "Short", "x.", "\u00a0", "_", "9",
+])
+
+
+@given(st.lists(_split_piece, max_size=60).map("".join))
+@settings(max_examples=1000, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_sentence_split_matches_the_unprefixed_pattern(text):
+    assert SENTENCE_SPLIT_RE.split(text) == OLD_SENTENCE_SPLIT_RE.split(text)
