@@ -2,12 +2,9 @@
 """Extra benchmarks for the optimization rounds (bench.py is frozen for
 measurement; this file holds the guide-§1 isolation tooling).
 
+KG-pipeline layer timings live in perfbench/ (``--trace 1``).
+
 Modes:
-  --kg-stages        stage-isolated timing of the KG pipeline (synth
-                     corpus identical to bench.py): assembly alone,
-                     assembly+fused kernel, then the full bench-parity
-                     kg_triples count. noop sink everywhere so we time
-                     computation, not collection.
   --noop  Q [Q...]   per-query noop-sink timing at $SPARK_GRAFT_SF_DIR.
   --plans Q [Q...]   write .explain("formatted") for queries to
                      plans/<tag>/<q>_<suffix>.txt (--tag r06 --suffix
@@ -27,7 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_CONVS = int(os.environ.get("BENCH_KG_CONVS", "20000"))
 
 
 def _spark(app="bench-extra"):
@@ -50,53 +46,6 @@ def _time(fn, runs=3):
         fn()
         samples.append(round(time.perf_counter() - t0, 3))
     return min(samples), samples
-
-
-def kg_stages(runs=3):
-    from bench import _synth_conversations
-    from ontocast_spark.operators.assemble import assemble_documents
-    from ontocast_spark.operators.fused import kg_construct_fused
-    from ontocast_spark.ontology import builtin_ontology_index
-    from ontocast_spark.pipeline import PipelineConfig, run_pipeline
-
-    spark = _spark("kg-stages")
-    sc = spark.sparkContext
-    conv = _synth_conversations(spark, N_CONVS).persist()
-    n_turns = conv.count()
-    index = builtin_ontology_index()
-    cfg = PipelineConfig()
-
-    out = {}
-
-    sc.setJobDescription("kg: synth input only (noop)")
-    out["synth_replay"] = _time(lambda: _noop(conv), runs)
-
-    docs = assemble_documents(conv, domain=cfg.domain,
-                              bucket_size=cfg.bucket_size,
-                              max_turns=cfg.max_turns)
-    sc.setJobDescription("kg: assembly (noop)")
-    _noop(docs)  # warmup
-    out["assembly"] = _time(lambda: _noop(docs), runs)
-
-    fused = kg_construct_fused(spark, docs, index, max_chunks=cfg.max_chunks)
-    sc.setJobDescription("kg: assembly+fused (noop)")
-    _noop(fused)  # warmup
-    out["assembly_fused"] = _time(lambda: _noop(fused), runs)
-
-    def full():
-        res = run_pipeline(spark, conv, config=cfg)
-        res["kg_triples"].count()
-
-    sc.setJobDescription("kg: full bench-parity count")
-    full()  # warmup
-    out["full_count"] = _time(full, runs)
-    sc.setJobDescription(None)
-
-    print(json.dumps({"n_turns": n_turns, "n_convs": N_CONVS,
-                      "stages": {k: {"best": v[0], "samples": v[1]}
-                                 for k, v in out.items()}}))
-    conv.unpersist()
-    spark.stop()
 
 
 def noop_queries(names, runs=3):
@@ -140,7 +89,6 @@ def write_plans(names, tag, suffix):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--kg-stages", action="store_true")
     ap.add_argument("--noop", nargs="*", default=None)
     ap.add_argument("--plans", nargs="*", default=None)
     ap.add_argument("--all-queries", action="store_true")
@@ -149,9 +97,6 @@ def main():
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
-    if args.kg_stages:
-        kg_stages(args.runs)
-        return
     names = args.noop if args.noop is not None else args.plans
     if args.all_queries:
         from ontocast_spark.queries import QUERIES

@@ -95,17 +95,6 @@ def active_embedder():
     return None
 
 
-def embed_batch(texts: list) -> np.ndarray:
-    """The chunker's embedding step: real model when one resolves,
-    deterministic hashed fallback otherwise (the documented C3
-    substitution — chunk boundaries differ from the model's, the
-    surrounding math is identical)."""
-    embedder = active_embedder()
-    if embedder is not None:
-        return np.asarray(embedder(texts), dtype=np.float64)
-    return np.stack([hash_embed(t) for t in texts])
-
-
 # token -> bucket memo; vocabulary is tiny relative to token volume, so
 # this turns the per-token crc32+encode into a dict hit. Bounded so a
 # long-lived executor worker cannot grow it without limit.

@@ -6,12 +6,12 @@ such tuples — matching rdflib's set semantics on ``Graph.add``
 (deduplication is implicit, cf. reference golden counts).
 
 Re-expressed public behavior:
-- entity extraction / adjacency / BFS components:
+- connected components:
   /root/reference/ontocast/tool/validate.py:94-155
 - hub auto-connect of disconnected components:
   /root/reference/ontocast/tool/validate.py:283-379
 
-These run inside grouped pandas UDFs (one chunk graph per call — chunk
+These run inside ``mapInPandas`` tasks (one chunk graph per call — chunk
 graphs are small by construction), so they are plain-Python hot loops
 over at most a few hundred triples.
 """
@@ -28,32 +28,6 @@ from .rdfterms import (
 )
 
 Triple = tuple  # (s: str, p: str, o: str, o_is_literal: bool, o_datatype: str|None)
-
-
-def make_triple(
-    s: str, p: str, o: str, o_is_literal: bool = False, o_datatype: str | None = None
-) -> Triple:
-    return (s, p, o, bool(o_is_literal), o_datatype)
-
-
-def get_all_entities(triples) -> set[str]:
-    """All IRIs appearing as subject or as IRI object."""
-    entities: set[str] = set()
-    for s, _, o, lit, _ in triples:
-        entities.add(s)
-        if not lit:
-            entities.add(o)
-    return entities
-
-
-def build_adjacency(triples) -> dict[str, set[str]]:
-    """Undirected adjacency over IRI–IRI triples."""
-    adj: dict[str, set[str]] = {}
-    for s, _, o, lit, _ in triples:
-        if not lit:
-            adj.setdefault(s, set()).add(o)
-            adj.setdefault(o, set()).add(s)
-    return adj
 
 
 def connected_components(triples) -> list[set[str]]:
@@ -114,26 +88,14 @@ def _degree_label_maps(triples):
     return degrees, labeled
 
 
-def choose_representative(triples, component: set[str]) -> str | None:
-    """Max-degree entity, preferring labeled/commented ones.
-
-    Degree = number of triples the entity participates in (the reference
-    counts ``1`` per triple where ``s == e or o == e``). Ties break on
-    IRI order for determinism (the reference relies on set iteration
-    order there).
-    """
-    if not component:
-        return None
-    degrees, labeled = _degree_label_maps(triples)
-    pool = (labeled & component) or component
-    return max(sorted(pool), key=lambda e: degrees.get(e, 0))
-
-
 def connect_via_hub(triples, chunk_iri: str) -> set[Triple]:
     """Hub auto-connect: if the graph has >1 component, add a chunk-hub
     entity plus bridging triples to one representative per component.
 
-    Returns the (possibly extended) graph as a set.
+    A component's representative is its max-degree entity (degree = the
+    triples it takes part in), preferring labeled/commented entities;
+    ties break on IRI order for determinism. Returns the (possibly
+    extended) graph as a set.
     """
     graph = set(triples)
     components = connected_components(graph)
@@ -152,3 +114,27 @@ def connect_via_hub(triples, chunk_iri: str) -> set[Triple]:
         graph.add((hub, SCHEMA_HAS_PART, rep, False, None))
         graph.add((rep, PROV_WAS_QUOTED_FROM, hub, False, None))
     return graph
+
+
+def sublimate_and_connect(
+    triples, chunk_iri: str, chunk_ns: str
+) -> tuple[list[Triple], list[Triple]]:
+    """Split one chunk's extraction into (facts, ontology addendum) and
+    hub-connect the facts side.
+
+    The split is the STRSTARTS filter of ontocast's
+    ``agent/sublimate_ontology.py`` (see ``operators/sublimate.py``): a
+    triple is a fact when its subject, predicate or IRI object lies in
+    the chunk namespace ``chunk_ns``. Facts come back sorted; the
+    addendum keeps extraction order.
+    """
+    facts, onto = [], []
+    for t in triples:
+        s, p, o, lit, _ = t
+        in_cd = (
+            s.startswith(chunk_ns)
+            or p.startswith(chunk_ns)
+            or ((not lit) and o.startswith(chunk_ns))
+        )
+        (facts if in_cd else onto).append(t)
+    return sorted(connect_via_hub(facts, chunk_iri)), onto

@@ -175,11 +175,6 @@ def clean_local_name(local_name: str) -> str:
     return cleaned or "entity"
 
 
-def doc_iri_for(domain: str, doc_hid: str) -> str:
-    """Document IRI: ``{domain}/doc/{doc_hid}``."""
-    return f"{domain}/doc/{doc_hid}"
-
-
 def chunk_iri_for(doc_iri: str, chunk_hid: str) -> str:
     """Chunk IRI: ``{doc_iri}/chunk/{chunk_hid}``."""
     return f"{doc_iri}/chunk/{chunk_hid}"

@@ -28,21 +28,6 @@ Scale design (10^12 turns, skewed conversations):
   10^9-turn adversarial conversation costs one filter, not one task.
 - Everything is built-in expressions — no Python, full whole-stage
   codegen.
-- ``single_exchange=True`` (optimization round 6, guide §2.4) replaces
-  the two payload shuffles (hash(conv_id, bucket), then hash(conv_id))
-  with ONE explicit hash repartition on ``conv_id``: partitioning on a
-  subset of the grouping keys satisfies the ClusteredDistribution
-  requirement of BOTH aggregations, so the text bytes cross the wire
-  exactly once. ``collect_list`` has no map-side reduction, so nothing
-  is lost by skipping the partial-aggregate exchange; per-group
-  buffers stay bounded by ``bucket_size`` and the per-task skew of a
-  mega-conversation on one reducer is capped by ``max_turns``.
-  Measured at sf1.0 (1M events, 15k conversations): full
-  materialization (noop sink) 3.12s → 0.98s. It is opt-in because a
-  consumer that only *counts* documents never materializes the text —
-  Catalyst prunes the concat work entirely — and for that pruned plan
-  the unconditional repartition is pure added cost (0.34s → 0.55s
-  measured); callers that materialize the text should pass True.
 """
 
 from __future__ import annotations
@@ -60,21 +45,14 @@ def assemble_documents(
     bucket_size: int = DEFAULT_BUCKET_SIZE,
     max_turns: int | None = None,
     separator: str = TURN_SEPARATOR,
-    single_exchange: bool = False,
 ) -> DataFrame:
-    """conversations(conv_id, turn_idx, text, ...) -> documents.
-
-    Returns (conv_id, doc_hid, doc_iri, n_turns, text). Pass
-    ``single_exchange=True`` when the caller materializes the text
-    column (see module docstring for the measured trade).
-    """
+    """conversations(conv_id, turn_idx, text, ...) -> documents
+    (conv_id, doc_hid, doc_iri, n_turns, text)."""
     df = conversations.select("conv_id", "turn_idx", "text")
     if max_turns is not None:
         df = df.filter(F.col("turn_idx") < F.lit(max_turns))
 
     df = df.withColumn("bucket", (F.col("turn_idx") / F.lit(bucket_size)).cast("int"))
-    if single_exchange:
-        df = df.repartition(F.col("conv_id"))
     bucketed = (
         df.groupBy("conv_id", "bucket")
         .agg(

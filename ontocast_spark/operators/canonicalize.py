@@ -1,16 +1,20 @@
 """Entity/predicate canonicalization (the aggregation heart).
 
-Two interchangeable strategies over the same contract
-(facts triples -> aggregated doc graphs + entity/predicate mappings):
+Two strategies over the same contract (facts triples -> aggregated doc
+graphs + entity/predicate mappings):
 
-1. :func:`canonicalize_local` — grouped pandas UDF per ``conv_id``
+1. :func:`canonicalize_combined` — grouped pandas UDF per ``conv_id``
    replaying the reference aggregator exactly
    (:mod:`ontocast_spark.kernels.aggregate`). The reference's
    disambiguation scope is one document
    (/root/reference/ontocast/tool/aggregate.py:70-84), so grouping by
    conversation is semantically exact AND embarrassingly parallel:
    group state is one conversation's triples, corpus parallelism is the
-   number of conversations. This is the production default.
+   number of conversations. It ends the staged reference chain
+   (assemble -> chunk -> extract -> canonicalize) that the fused
+   production pass (``operators/fused.py``) is tested against; the
+   fused pass runs the same ``aggregate_chunks`` call inside its
+   kernel task.
 
 2. :func:`ontocast_spark.operators.cc` + blocked candidate pairs — the
    distributed variant for *cross-document* canonicalization, where a
@@ -30,8 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels.aggregate import ChunkGraph, aggregate_chunks
-from ..schemas import AGG_TRIPLES, ENTITY_MAPPING
-from .sublimate import split_facts_ontology  # noqa: F401  (re-export for API parity)
 
 
 def _group_chunks(pdf: pd.DataFrame) -> list[ChunkGraph]:
@@ -62,32 +64,6 @@ def _group_chunks(pdf: pd.DataFrame) -> list[ChunkGraph]:
     return [g for _, g in sorted(keyed, key=lambda kv: kv[0])]
 
 
-def canonicalize_local(facts: DataFrame) -> DataFrame:
-    """facts triples -> aggregated, disambiguated doc graphs
-    (conv_id, doc_iri, subj, pred, obj, obj_is_literal, obj_datatype)."""
-
-    def aggregate_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        doc_iri = pdf["doc_iri"].iloc[0]
-        out, _, _ = aggregate_chunks(_group_chunks(pdf), doc_namespace=doc_iri)
-        rows = sorted(out)
-        return pd.DataFrame(
-            {
-                "conv_id": conv_id,
-                "doc_iri": doc_iri,
-                "subj": [t[0] for t in rows],
-                "pred": [t[1] for t in rows],
-                "obj": [t[2] for t in rows],
-                "obj_is_literal": [t[3] for t in rows],
-                "obj_datatype": [t[4] for t in rows],
-            }
-        )
-
-    return facts.groupBy("conv_id").applyInPandas(
-        aggregate_group, schema=AGG_TRIPLES
-    )
-
-
 CANON_COMBINED_SCHEMA = (
     "conv_id string, doc_iri string, row_kind string, subj string, "
     "pred string, obj string, obj_is_literal boolean, obj_datatype string"
@@ -98,10 +74,8 @@ def canonicalize_combined(facts: DataFrame) -> DataFrame:
     """One grouped pass emitting BOTH the aggregated triples
     (row_kind='triple') and the canonicalization audit rows
     (row_kind='entity_map'/'predicate_map', subj=original,
-    obj=canonical). The greedy disambiguation is O(n^2) per document —
-    running it once and splitting by row_kind afterwards halves the
-    dominant cost vs calling canonicalize_local + entity_mappings_local
-    separately."""
+    obj=canonical). The greedy disambiguation is O(n^2) per document,
+    so it runs once and callers split by row_kind afterwards."""
 
     def combined_group(pdf: pd.DataFrame) -> pd.DataFrame:
         conv_id = pdf["conv_id"].iloc[0]
@@ -124,29 +98,6 @@ def canonicalize_combined(facts: DataFrame) -> DataFrame:
 
     return facts.groupBy("conv_id").applyInPandas(
         combined_group, schema=CANON_COMBINED_SCHEMA
-    )
-
-
-def entity_mappings_local(facts: DataFrame) -> DataFrame:
-    """facts triples -> canonicalization audit table
-    (conv_id, original_iri, canonical_iri, kind)."""
-
-    def mapping_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        doc_iri = pdf["doc_iri"].iloc[0]
-        _, emap, pmap = aggregate_chunks(_group_chunks(pdf), doc_namespace=doc_iri)
-        originals = list(emap) + list(pmap)
-        return pd.DataFrame(
-            {
-                "conv_id": conv_id,
-                "original_iri": originals,
-                "canonical_iri": [emap[o] for o in emap] + [pmap[o] for o in pmap],
-                "kind": ["entity"] * len(emap) + ["predicate"] * len(pmap),
-            }
-        )
-
-    return facts.groupBy("conv_id").applyInPandas(
-        mapping_group, schema=ENTITY_MAPPING
     )
 
 

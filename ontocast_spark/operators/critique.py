@@ -106,7 +106,7 @@ def retry_failed_chunks(
         prev_rows = result.join(
             failed_keys, ["conv_id", "chunk_hid"], "semi"
         ).select(cmp_cols)
-        retried = extract_triples(spark, failed_chunks, index, fuse=True).withColumn(
+        retried = extract_triples(spark, failed_chunks, index).withColumn(
             "attempt", F.lit(attempt)
         )
         result = result.join(

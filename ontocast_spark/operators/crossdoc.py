@@ -4,7 +4,7 @@ components -> canonical minting -> rewrite joins).
 
 The reference disambiguates within ONE document with a greedy O(n^2)
 pairwise pass (/root/reference/ontocast/tool/aggregate.py:484-559);
-``canonicalize_local`` replays that exactly. This module generalizes the
+``canonicalize_combined`` replays that exactly. This module generalizes the
 same matching semantics to the whole corpus, where no single group fits
 one task:
 

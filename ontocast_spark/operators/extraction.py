@@ -9,16 +9,17 @@ Wraps the frozen deterministic extractor kernel
    a deterministic scorer — same I/O contract incl. the null fallback),
 2. extracts ontology-constrained triples in the chunk namespace
    (replacing /root/reference/ontocast/agent/render_facts.py:25-98),
-3. optionally applies the sublimation split + facts-side hub
-   auto-connect *inline* (``fuse=True``): the chunk's full graph is
-   already in hand inside the UDF, so splitting and connecting here
-   saves the (conv_id, chunk_hid) shuffle that a separate grouped
-   validation stage would cost. The standalone operators in
-   ``sublimate.py`` / ``validation.py`` exist for parity and tests; the
-   pipeline default is the fused path.
+3. applies the sublimation split + facts-side hub auto-connect inline
+   (:func:`ontocast_spark.kernels.graphs.sublimate_and_connect`): the
+   chunk's full graph is already in hand inside the UDF, so splitting
+   and connecting here saves the (conv_id, chunk_hid) shuffle that a
+   separate grouped validation stage would cost.
 
-The ontology index is broadcast once per job (``sparkContext.broadcast``)
-— it is the only shared state and is a few KB.
+This is the staged reference for the fused kernel pass
+(``operators/fused.py``), and critique retry re-extracts failed chunks
+through it. The ontology index is broadcast once per job
+(``sparkContext.broadcast``) — it is the only shared state and is a few
+KB.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..kernels.extract import extract_chunk_triples
-from ..kernels.graphs import connect_via_hub
+from ..kernels.graphs import sublimate_and_connect
 from ..kernels.rdfterms import iri2namespace
 from ..ontology import OntologyIndex
 from ..schemas import TRIPLES
@@ -51,12 +52,9 @@ def extract_triples(
     spark: SparkSession,
     chunks: DataFrame,
     index: OntologyIndex,
-    fuse: bool = True,
 ) -> DataFrame:
-    """chunks -> triples. With ``fuse=True`` the output carries a
-    ``part`` column ('facts' | 'ontology') and facts graphs are already
-    hub-connected; with ``fuse=False`` raw extraction rows are returned
-    (part='raw') for the standalone sublimate/validate operators."""
+    """chunks -> triples with a ``part`` column ('facts' | 'ontology');
+    facts graphs are already hub-connected."""
     bc_index = spark.sparkContext.broadcast(index)
 
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -90,21 +88,7 @@ def extract_triples(
                 triples = extract_chunk_triples(
                     text or "", chunk_ns, idx, ontology_id
                 )
-                if not fuse:
-                    emit(conv_id, doc_iri, hid, chunk_iri, cidx, triples, "raw")
-                    continue
-                # sublimation split (the SPARQL STRSTARTS predicate,
-                # /root/reference/ontocast/agent/sublimate_ontology.py:31-72)
-                facts, onto = [], []
-                for t in triples:
-                    s, p, o, lit, dt = t
-                    in_cd = (
-                        s.startswith(chunk_ns)
-                        or p.startswith(chunk_ns)
-                        or ((not lit) and o.startswith(chunk_ns))
-                    )
-                    (facts if in_cd else onto).append(t)
-                facts = sorted(connect_via_hub(facts, chunk_iri))
+                facts, onto = sublimate_and_connect(triples, chunk_iri, chunk_ns)
                 emit(conv_id, doc_iri, hid, chunk_iri, cidx, facts, "facts")
                 emit(conv_id, doc_iri, hid, chunk_iri, cidx, onto, "ontology")
             yield pd.DataFrame(out, columns=list(cols))

@@ -1,32 +1,28 @@
 """Fused per-document KG construction: one ``mapInPandas`` pass from
-assembled documents straight to canonical triples + mappings +
-ontology-addendum rows.
+raw turns straight to canonical triples + mappings + ontology-addendum
+rows. This is the production KG path (``pipeline.run_pipeline``).
 
 Why this exists (the 100-TB argument): after document assembly, every
 remaining stage of the reference's semantics — chunking, ontology
 selection, extraction, sublimation, hub-connect, aggregation/
 canonicalization — is *document-local* (the reference's disambiguation
 scope is one document, /root/reference/ontocast/tool/aggregate.py:70-84).
-A document is one row, so all of its intermediate data lives inside one
-task. The staged operators (chunking.py / extraction.py /
+A document lives inside one task, so all of its intermediate data does
+too. The staged operators (assemble.py / chunking.py / extraction.py /
 canonicalize.py) materialize ~60 intermediate triple rows per
 conversation through Arrow and shuffle them for the canonicalize
-groupBy; this fused operator eliminates that entire exchange and all
+groupBy; this fused operator eliminates that exchange and all
 intermediate Arrow crossings.
 
-Round-6 optimization (guide §2.4): document assembly itself is also
-fused. :func:`kg_construct_fused_turns` consumes raw *turns*: one hash
-repartition on ``conv_id`` + an in-partition sort replace the two
-``collect_list`` aggregation exchanges of the staged assembly, and the
-per-conversation concatenation happens as a streaming pass inside the
-same Python task that runs the extraction kernels. The whole pipeline
-is then exactly ONE exchange: turns cross the wire once, sorted, and
-never cross again. Per-conversation state is bounded by the pipeline's
-``max_turns`` cap (the same skew guard the staged assembly has).
-:func:`kg_construct_fused` (documents in) remains for callers that
-already hold assembled documents; both produce identical rows, and both
-produce exactly the rows of the staged operator chain
-(tests/test_fused.py asserts set equality).
+Document assembly is fused as well: one hash repartition on
+``conv_id`` + an in-partition sort replace the two ``collect_list``
+aggregation exchanges of the staged assembly, and the per-conversation
+concatenation happens as a streaming pass inside the same Python task
+that runs the extraction kernels. The whole pipeline is then exactly
+ONE exchange: turns cross the wire once, sorted, and never cross again.
+Per-conversation state is bounded by the pipeline's ``max_turns`` cap
+(the same skew guard the staged assembly has). The staged chain stays
+as the reference: tests/test_fused.py asserts the fused rows equal it.
 """
 
 from __future__ import annotations
@@ -41,7 +37,7 @@ from pyspark.sql import functions as F
 from ..kernels.aggregate import ChunkGraph, aggregate_chunks
 from ..kernels.chunker import MAX_CHUNK_SIZE, MIN_CHUNK_SIZE, chunk_document
 from ..kernels.extract import extract_chunk_triples
-from ..kernels.graphs import connect_via_hub
+from ..kernels.graphs import sublimate_and_connect
 from ..kernels.rdfterms import chunk_iri_for, iri2namespace, render_text_hash
 from ..ontology import OntologyIndex
 from .assemble import TURN_SEPARATOR
@@ -91,53 +87,14 @@ def _construct_document(
         chunk_ns = iri2namespace(chunk_iri)
         ontology_id = idx.select_ontology(chunk_text)
         triples = extract_chunk_triples(chunk_text, chunk_ns, idx, ontology_id)
-        facts, onto = [], []
-        for t in triples:
-            s, p, o, lit, dt = t
-            in_cd = (
-                s.startswith(chunk_ns)
-                or p.startswith(chunk_ns)
-                or ((not lit) and o.startswith(chunk_ns))
-            )
-            (facts if in_cd else onto).append(t)
+        facts, onto = sublimate_and_connect(triples, chunk_iri, chunk_ns)
         onto_rows.update(onto)
-        facts = sorted(connect_via_hub(facts, chunk_iri))
         chunk_graphs.append(ChunkGraph(hid, chunk_iri, facts))
     agg, emap, pmap = aggregate_chunks(chunk_graphs, doc_iri)
     emit("triple", sorted(agg))
     emit("entity_map", [(o, "", c, False, None) for o, c in emap.items()])
     emit("predicate_map", [(o, "", c, False, None) for o, c in pmap.items()])
     emit("ontology", sorted(onto_rows))
-
-
-def kg_construct_fused(
-    spark: SparkSession,
-    documents: DataFrame,
-    index: OntologyIndex,
-    max_chunks: int | None = None,
-    min_chunk_size: int = MIN_CHUNK_SIZE,
-    max_chunk_size: int = MAX_CHUNK_SIZE,
-) -> DataFrame:
-    """documents(conv_id, doc_iri, text) -> combined canon rows
-    (row_kind: triple | entity_map | predicate_map | ontology)."""
-    bc_index = spark.sparkContext.broadcast(index)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx: OntologyIndex = bc_index.value
-        for pdf in batches:
-            out = {k: [] for k in _COLS}
-            for conv_id, doc_iri, text in zip(
-                pdf["conv_id"], pdf["doc_iri"], pdf["text"]
-            ):
-                _construct_document(
-                    conv_id, doc_iri, text, idx, out,
-                    max_chunks, min_chunk_size, max_chunk_size,
-                )
-            yield pd.DataFrame(out, columns=list(_COLS))
-
-    return documents.select("conv_id", "doc_iri", "text").mapInPandas(
-        process, schema=CANON_COMBINED_SCHEMA
-    )
 
 
 def kg_construct_fused_turns(
@@ -154,11 +111,12 @@ def kg_construct_fused_turns(
     """conversations(conv_id, turn_idx, text, ...) -> combined canon
     rows, with document assembly fused into the kernel pass.
 
-    Equivalent to ``kg_construct_fused(spark,
-    assemble_documents(conversations, domain, ...), index, ...)`` row
-    for row: the repartition + in-partition sort reproduce the staged
-    assembly's ``array_sort(collect_list(struct(turn_idx, text)))``
-    ordering (turn_idx, then text as tie-break; null texts skipped like
+    Equivalent row for row to the staged chain ``assemble_documents``
+    -> ``chunk_documents`` -> ``extract_triples`` ->
+    ``canonicalize_combined`` (ontology rows: as a distinct set): the
+    repartition + in-partition sort reproduce the staged assembly's
+    ``array_sort(collect_list(struct(turn_idx, text)))`` ordering
+    (turn_idx, then text as tie-break; null texts skipped like
     ``array_join`` skips null elements), and ``sha256(text)[:12]`` /
     the doc IRI are computed with hashlib over the same UTF-8 bytes
     Spark's ``sha2`` hashes. One exchange total.

@@ -5,18 +5,18 @@ reference's whole langgraph state machine,
 Stage graph (each stage is set-oriented over the whole corpus — the
 reference's per-document/per-chunk loops disappear)::
 
-    conversations ──assemble──▶ documents ──chunk──▶ chunks
-        ──extract(+select,+sublimate,+connect fused)──▶ triples{facts,ontology}
-        facts ──canonicalize(groupBy conv_id)──▶ kg_triples
+    conversations ──repartition(conv_id)+sort──▶ one mapInPandas pass
+        (assemble, chunk, select, extract, sublimate, connect,
+         canonicalize: operators/fused.kg_construct_fused_turns)
+        ──▶ kg_canon{triple, entity_map, predicate_map, ontology}
+        triple ──▶ kg_triples;  *_map ──▶ entity_mappings
         ontology ──dedup──▶ ontology_alignments
 
-Shuffle budget (what actually moves at 100 TB):
-- fused path (default, round 6): ONE hash repartition of the raw turns
-  on conv_id — assembly, chunking, extraction, sublimation, connection
-  and canonicalization all run inside the single downstream
-  ``mapInPandas`` task (operators/fused.kg_construct_fused_turns);
-- staged path (diagnostic): the two-level assembly groupBy (bounded
-  buffers) plus the canonicalize groupBy(conv_id).
+Shuffle budget (what actually moves at 100 TB): ONE hash repartition
+of the raw turns on conv_id — every document-local stage runs inside
+the single downstream ``mapInPandas`` task. The staged operators
+(assemble -> chunk -> extract -> canonicalize) compute the same rows
+and serve as the test reference (tests/test_fused.py).
 The ontology-addendum dedup is a small distinct over ontology-namespace
 rows (term declarations repeat per chunk — high map-side combine
 ratio).
@@ -37,10 +37,7 @@ from pyspark.sql import functions as F
 from . import io as kgio
 from .ontology import OntologyIndex, builtin_ontology_index
 from .schemas import split_lang_columns
-from .operators.assemble import assemble_documents
-from .operators.canonicalize import canonicalize_combined
-from .operators.chunking import chunk_documents
-from .operators.extraction import extract_triples
+from .operators.fused import kg_construct_fused_turns
 
 
 @dataclass
@@ -48,12 +45,6 @@ class PipelineConfig:
     domain: str = "https://example.com"
     max_turns: int | None = 100_000  # mega-conversation cap (skew guard)
     max_chunks: int | None = None  # reference AgentState.max_chunks analog
-    bucket_size: int = 1024
-    # fused per-document pass (operators/fused.py): identical rows to the
-    # staged path, but no canonicalize shuffle and no intermediate Arrow
-    # crossings — the production default. Staged mode materializes the
-    # per-chunk triples table as a diagnostic.
-    fused: bool = True
 
 
 def dedup_ontology_addendum(onto: DataFrame) -> DataFrame:
@@ -88,78 +79,26 @@ def run_pipeline(
             conversations, spark, warehouse, "kg_canon"
         )
 
-    # lazily-built documents table (returned to callers / staged path);
-    # the fused path does NOT consume it — assembly is fused into the
-    # kernel pass (one exchange; see operators/fused.py), so this
-    # DataFrame is only evaluated when a consumer actually runs it
-    documents = assemble_documents(
-        conversations,
-        domain=cfg.domain,
-        bucket_size=cfg.bucket_size,
-        max_turns=cfg.max_turns,
-        single_exchange=True,  # every in-pipeline consumer materializes text
+    combined = kg_construct_fused_turns(
+        spark, conversations, index, domain=cfg.domain,
+        max_turns=cfg.max_turns, max_chunks=cfg.max_chunks,
     )
-
-    facts = None
-    chunks = None
-    if cfg.fused:
-        from .operators.fused import kg_construct_fused_turns
-
-        combined = kg_construct_fused_turns(
-            spark, conversations, index, domain=cfg.domain,
-            max_turns=cfg.max_turns, max_chunks=cfg.max_chunks,
+    if warehouse is not None:
+        mode = (
+            "append"
+            if kgio.stage_exists(spark, warehouse, "kg_canon")
+            else "overwrite"
         )
-        ontology_rows = combined.filter(F.col("row_kind") == "ontology").drop(
-            "row_kind"
+        # partition by row_kind: downstream row_kind filters become
+        # partition pruning instead of data scans
+        kgio.write_stage(
+            combined, warehouse, "kg_canon", run_id, mode=mode,
+            partition_by=("row_kind",),
         )
-        if warehouse is not None:
-            mode = (
-                "append"
-                if kgio.stage_exists(spark, warehouse, "kg_canon")
-                else "overwrite"
-            )
-            # partition by row_kind: downstream row_kind filters become
-            # partition pruning instead of data scans
-            kgio.write_stage(
-                combined, warehouse, "kg_canon", run_id, mode=mode,
-                partition_by=("row_kind",),
-            )
-            combined = kgio.read_stage(spark, warehouse, "kg_canon")
-            ontology_rows = combined.filter(
-                F.col("row_kind") == "ontology"
-            ).drop("row_kind")
-    else:
-        chunks = chunk_documents(documents, max_chunks=cfg.max_chunks)
-        triples = extract_triples(spark, chunks, index, fuse=True)
-
-        if warehouse is not None:
-            # materialize extraction once (it feeds three outputs) — no
-            # pandas-UDF re-execution for downstream projections
-            mode = (
-                "append"
-                if kgio.stage_exists(spark, warehouse, "triples")
-                else "overwrite"
-            )
-            kgio.write_stage(triples, warehouse, "triples", run_id, mode=mode)
-            triples = kgio.read_stage(spark, warehouse, "triples")
-            # the triples table may hold conversations finished in a
-            # prior run; only canonicalize the pending ones
-            pending = kgio.resume_filter(triples, spark, warehouse, "kg_canon")
-        else:
-            pending = triples
-
-        facts = pending.filter(F.col("part") == "facts").drop("part")
-        ontology_rows = triples.filter(F.col("part") == "ontology").drop("part")
-
-        combined = canonicalize_combined(facts)
-        if warehouse is not None:
-            mode = (
-                "append"
-                if kgio.stage_exists(spark, warehouse, "kg_canon")
-                else "overwrite"
-            )
-            kgio.write_stage(combined, warehouse, "kg_canon", run_id, mode=mode)
-            combined = kgio.read_stage(spark, warehouse, "kg_canon")
+        combined = kgio.read_stage(spark, warehouse, "kg_canon")
+    ontology_rows = combined.filter(F.col("row_kind") == "ontology").drop(
+        "row_kind"
+    )
 
     kg_triples = split_lang_columns(
         combined.filter(F.col("row_kind") == "triple").select(
@@ -180,15 +119,10 @@ def run_pipeline(
     alignments = split_lang_columns(dedup_ontology_addendum(ontology_rows))
 
     out = {
-        "documents": documents,
         "kg_triples": kg_triples,
         "entity_mappings": mappings,
         "ontology_alignments": alignments,
     }
-    if chunks is not None:
-        out["chunks"] = chunks
-    if facts is not None:
-        out["facts"] = facts
     if warehouse is not None:
         # projections of the complete kg_canon store: cheap
         # parquet-to-parquet rewrites, refreshed whole

@@ -1161,10 +1161,6 @@ def fn_strstarts(var: str, prefix: str):
     return F.col(var).startswith(prefix)
 
 
-def fn_strends(var: str, suffix: str):
-    return F.col(var).endswith(suffix)
-
-
 def fn_contains(var: str, needle: str):
     return F.col(var).contains(needle)
 

@@ -1393,14 +1393,6 @@ def _has_aggcall(ast) -> bool:
     return False
 
 
-def _pattern_vars(patterns) -> set:
-    """All variables bound by a list of triple/quad patterns."""
-    return {
-        t[1:] for p in patterns for t in p
-        if isinstance(t, str) and t.startswith("?")
-    }
-
-
 def _compile_expr(ast):
     """FILTER AST -> Catalyst Column."""
     kind = ast[0]

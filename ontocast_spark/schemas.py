@@ -59,23 +59,6 @@ TRIPLES = StructType([
     StructField("obj_datatype", StringType(), True),
 ])
 
-AGG_TRIPLES = StructType([
-    StructField("conv_id", StringType(), False),
-    StructField("doc_iri", StringType(), False),
-    StructField("subj", StringType(), False),
-    StructField("pred", StringType(), False),
-    StructField("obj", StringType(), False),
-    StructField("obj_is_literal", BooleanType(), False),
-    StructField("obj_datatype", StringType(), True),
-])
-
-ENTITY_MAPPING = StructType([
-    StructField("conv_id", StringType(), False),
-    StructField("original_iri", StringType(), False),
-    StructField("canonical_iri", StringType(), False),
-    StructField("kind", StringType(), False),  # 'entity' | 'predicate'
-])
-
 ONTOLOGY_TERMS = StructType([
     StructField("ontology_id", StringType(), False),
     StructField("iri", StringType(), False),

@@ -18,7 +18,6 @@ driver-side (as in the reference) into the broadcastable term index.
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -173,7 +172,3 @@ def write_facts_turtle(
     )
     return written
 
-
-def doc_payload_json(text: str) -> bytes:
-    """The reference's input payload shape, for round-trip tests."""
-    return json.dumps({"text": text}).encode()

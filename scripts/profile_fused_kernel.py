@@ -16,7 +16,7 @@ from ontocast_spark.ontology import builtin_ontology_index
 from ontocast_spark.kernels.aggregate import ChunkGraph, aggregate_chunks
 from ontocast_spark.kernels.chunker import chunk_document
 from ontocast_spark.kernels.extract import extract_chunk_triples
-from ontocast_spark.kernels.graphs import connect_via_hub
+from ontocast_spark.kernels.graphs import sublimate_and_connect
 from ontocast_spark.kernels.rdfterms import chunk_iri_for, iri2namespace, render_text_hash
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
@@ -42,17 +42,8 @@ def run():
             chunk_ns = iri2namespace(chunk_iri)
             ontology_id = idx.select_ontology(chunk_text)
             triples = extract_chunk_triples(chunk_text, chunk_ns, idx, ontology_id)
-            facts, onto = [], []
-            for t in triples:
-                s, p, o, lit, dt = t
-                in_cd = (
-                    s.startswith(chunk_ns)
-                    or p.startswith(chunk_ns)
-                    or ((not lit) and o.startswith(chunk_ns))
-                )
-                (facts if in_cd else onto).append(t)
+            facts, onto = sublimate_and_connect(triples, chunk_iri, chunk_ns)
             onto_rows.update(onto)
-            facts = sorted(connect_via_hub(facts, chunk_iri))
             chunk_graphs.append(ChunkGraph(hid, chunk_iri, facts))
         agg, emap, pmap = aggregate_chunks(chunk_graphs, doc_iri)
         n_triples += len(agg)

@@ -17,7 +17,7 @@ def test_retry_failed_chunks(spark):
     conv = spark.createDataFrame(gen_corpus(5, seed=21, mega_every=0), CONVERSATIONS)
     docs = assemble_documents(conv)
     chunks = chunk_documents(docs).cache()
-    triples = extract_triples(spark, chunks, idx, fuse=True)
+    triples = extract_triples(spark, chunks, idx)
     out = retry_failed_chunks(spark, chunks, triples, idx, threshold=50.0)
     rows = out.select("attempt", "counts_exceeded").distinct().collect()
     attempts = {r["attempt"] for r in rows}

@@ -126,22 +126,27 @@ def test_fuzzy_unicode_case_expansion_parity(spark):
 
 
 @pytest.mark.slow
-def test_crossdoc_pr_vs_local_replay(spark):
+def test_crossdoc_pr_vs_local_replay(spark, reference_chain):
     """P/R of the distributed mapping vs the exact greedy replay,
     restricted to per-document scope (same scope as the reference).
     Pair-level agreement must be >= 0.95 both ways."""
-    from ontocast_spark.pipeline import PipelineConfig, run_pipeline
     from ontocast_spark.synth import gen_corpus
 
     rows = gen_corpus(30, seed=7, mega_every=0)
     conv = spark.createDataFrame(rows, schema=CONVERSATIONS)
-    out = run_pipeline(spark, conv, config=PipelineConfig(fused=False))
-    facts = out["facts"].cache()
+    triples = reference_chain(conv)
+    facts = triples.filter(F.col("part") == "facts").drop("part").cache()
 
     # exact per-doc mapping (reference replay)
-    from ontocast_spark.operators.canonicalize import entity_mappings_local
+    from ontocast_spark.operators.canonicalize import canonicalize_combined
 
-    local_map = entity_mappings_local(facts).filter(F.col("kind") == "entity")
+    local_map = canonicalize_combined(facts).filter(
+        F.col("row_kind") == "entity_map"
+    ).select(
+        "conv_id",
+        F.col("subj").alias("original_iri"),
+        F.col("obj").alias("canonical_iri"),
+    )
     local_pairs = set()
     by_canon = {}
     for r in local_map.collect():
@@ -461,7 +466,7 @@ def test_mint_property_no_collisions(spark):
 
 
 @pytest.mark.slow
-def test_incremental_vs_batch_corpus_agreement(spark):
+def test_incremental_vs_batch_corpus_agreement(spark, reference_chain):
     """Corpus-level: split the synthetic corpus into two batches, run
     batch-all canonicalization vs batch-A + incremental-B, and compare
     the induced same-canonical pair sets. The incremental path may only
@@ -472,14 +477,13 @@ def test_incremental_vs_batch_corpus_agreement(spark):
         canonical_entity_meta,
         incremental_canonicalize,
     )
-    from ontocast_spark.pipeline import PipelineConfig, run_pipeline
     from ontocast_spark.schemas import CONVERSATIONS
     from ontocast_spark.synth import gen_corpus
 
     rows = gen_corpus(24, seed=11, mega_every=0)
     conv = spark.createDataFrame(rows, schema=CONVERSATIONS)
-    facts = run_pipeline(spark, conv, config=PipelineConfig(fused=False))["facts"]
-    facts = facts.persist()
+    triples = reference_chain(conv)
+    facts = triples.filter(F.col("part") == "facts").drop("part").persist()
     convs = sorted({r[0] for r in rows})
     half = set(convs[: len(convs) // 2])
     fa = facts.filter(F.col("conv_id").isin(half))

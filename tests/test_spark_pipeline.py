@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from ontocast_spark.kernels.rdfterms import render_text_hash
 from ontocast_spark.ontology import builtin_ontology_index
 from ontocast_spark.operators.assemble import assemble_documents
-from ontocast_spark.operators.canonicalize import canonicalize_local
+from ontocast_spark.operators.canonicalize import canonicalize_combined
 from ontocast_spark.operators.chunking import chunk_documents
 from ontocast_spark.operators.extraction import extract_triples
 from ontocast_spark.operators.sublimate import split_facts_ontology
@@ -94,7 +94,7 @@ def test_spark_canonicalize_golden_22(spark):
             )
     facts = spark.createDataFrame(rows, schema=TRIPLES)
     connected = connect_chunks(facts)
-    agg = canonicalize_local(connected)
+    agg = canonicalize_combined(connected).filter(F.col("row_kind") == "triple")
     out = agg.collect()
     assert len(out) == 22
 

@@ -183,27 +183,19 @@ def test_multimodal_plumbing(spark):
     }
 
 
-def test_critique_scores(spark):
+def test_critique_scores(spark, reference_chain):
     from ontocast_spark.operators.critique import score_facts, score_ontology_addendum
     from ontocast_spark.pipeline import run_pipeline
     from ontocast_spark.schemas import CONVERSATIONS
     from ontocast_spark.synth import gen_corpus
 
-    from ontocast_spark.pipeline import PipelineConfig
-
     conv = spark.createDataFrame(gen_corpus(6, seed=3, mega_every=0), CONVERSATIONS)
-    out = run_pipeline(spark, conv, config=PipelineConfig(fused=False))
-    fs = score_facts(out["facts"])
+    triples = reference_chain(conv)
+    fs = score_facts(triples.filter(F.col("part") == "facts").drop("part"))
     rows = fs.collect()
     assert rows and all(0.0 <= r["score"] <= 100.0 for r in rows)
-    onto = out["ontology_alignments"]
-    # score addendum per chunk needs chunk cols; use the raw part rows
-    from ontocast_spark.operators.extraction import extract_triples
-    from ontocast_spark.ontology import builtin_ontology_index
-
-    triples = extract_triples(
-        spark, out["chunks"], builtin_ontology_index(), fuse=True
-    )
+    onto = run_pipeline(spark, conv)["ontology_alignments"]
+    # score addendum per chunk needs chunk cols; use the extraction rows
     os_ = score_ontology_addendum(triples.filter(F.col("part") == "ontology"))
     orows = os_.collect()
     assert orows and all(0.0 <= r["score"] <= 100.0 for r in orows)
