@@ -144,36 +144,3 @@ def resume_filter(
     done = read_stage(spark, warehouse, stage).select("conv_id").distinct()
     return inputs.join(done, on="conv_id", how="left_anti")
 
-
-def write_triples_bucketed(
-    triples: DataFrame, table: str, buckets: int = 64
-) -> DataFrame:
-    """Materialize a triple table bucketed + sorted by ``subj`` and
-    return the bucketed scan.
-
-    The dominant BGP shape is the subject star — several patterns
-    sharing ``?s`` — and every such join (plus DISTINCT over outputs
-    that include ``?s``) keys on subj. Against a plain parquet table
-    each join is a full shuffle; against this layout Catalyst sees the
-    bucketing and plans the ENTIRE star query with zero Exchange
-    operators (asserted by tests/test_edge_cases.py's plan guard). At
-    100 TB, size ``buckets`` so one bucket's triples fit an executor
-    core's working set (e.g. ~2048 buckets for a 1000-core cluster);
-    the write is the only shuffle the workload ever pays for
-    subject-keyed access.
-
-    Requires a session with a warehouse dir (``saveAsTable``); the
-    reference's Fuseki/TDB role of a persistent indexed store
-    (fuseki.py:188-270) maps to exactly this kind of layout.
-
-    Spark cannot overwrite a table that the input is simultaneously
-    being read from — to re-bucket an existing store, stage through a
-    different table name (write to ``{table}__next``, then
-    ``ALTER TABLE ... RENAME``) or materialize the input first."""
-    (
-        triples.write.mode("overwrite")
-        .bucketBy(buckets, "subj")
-        .sortBy("subj")
-        .saveAsTable(table)
-    )
-    return triples.sparkSession.table(table)

@@ -41,60 +41,6 @@ SENTENCE_SPLIT_RE = re.compile(
 EMBED_DIM = 64
 _TOKEN_RE = re.compile(r"[A-Za-z0-9]+")
 
-# --- optional-dependency embedder hook --------------------------------
-# Same pattern as the S2/media codec hooks: a registered batch embedder
-# (fn(list[str]) -> (n, d) ndarray) wins, else sentence-transformers is
-# auto-detected and loads the reference's model
-# (tool/chunk/chunker.py:14-16: paraphrase-multilingual-mpnet-base-v2),
-# else the deterministic hashed bag-of-tokens embedding stands in.
-_registered_embedder = None
-_worker_st_model = None
-REFERENCE_ST_MODEL = "sentence-transformers/paraphrase-multilingual-mpnet-base-v2"
-
-
-def register_embedder(fn) -> None:
-    """Plug a batch sentence embedder globally: ``fn(texts) ->
-    np.ndarray (n, d)``. Ships to executors inside the mapInPandas
-    closure (must be cloudpickle-serializable); ``None`` clears."""
-    global _registered_embedder
-    _registered_embedder = fn
-
-
-def _st_embed(texts: list) -> np.ndarray:
-    """sentence-transformers batch encode, model loaded lazily ONCE per
-    Python worker (the model is heavyweight and unpicklable — never let
-    it ride in a closure)."""
-    global _worker_st_model
-    if _worker_st_model is None:
-        from sentence_transformers import SentenceTransformer
-
-        _worker_st_model = SentenceTransformer(REFERENCE_ST_MODEL)
-    return np.asarray(_worker_st_model.encode(list(texts)))
-
-
-def active_embedder():
-    """Registered embedder, then sentence-transformers IF explicitly
-    opted in (``ONTOCAST_SPARK_AUTO_EMBEDDER=1`` + importable), else
-    ``None`` (hashed bag-of-tokens fallback).
-
-    Auto-detection is opt-in by design: an importable model silently
-    changing ``split_text`` chunk boundaries (and thus pipeline output,
-    goldens, and bench numbers) between environments with no code
-    change would break environment invariance — the default path must
-    produce identical bytes everywhere."""
-    import importlib.util
-    import os
-
-    if _registered_embedder is not None:
-        return _registered_embedder
-    if (
-        os.environ.get("ONTOCAST_SPARK_AUTO_EMBEDDER") == "1"
-        and importlib.util.find_spec("sentence_transformers") is not None
-    ):
-        return _st_embed
-    return None
-
-
 # token -> bucket memo; vocabulary is tiny relative to token volume, so
 # this turns the per-token crc32+encode into a dict hit. Bounded so a
 # long-lived executor worker cannot grow it without limit.
@@ -223,14 +169,7 @@ def split_text(
     sentences = [s for s in sentences if s]
     if len(sentences) <= 1:
         return sentences
-    embedder = active_embedder()
-    if embedder is None:
-        # hashed-BoT fallback: window sums, no combined-string builds
-        embeddings = _hash_embed_windows(sentences, buffer_size)
-    else:
-        combined = _combine_sentences(sentences, buffer_size)
-        embeddings = np.asarray(embedder(combined), dtype=np.float64)
-    distances = _cosine_distances(embeddings)
+    distances = _cosine_distances(_hash_embed_windows(sentences, buffer_size))
     threshold = np.percentile(distances, percentile)
     indices_above = [i for i, d in enumerate(distances) if d > threshold]
 

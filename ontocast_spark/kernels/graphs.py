@@ -123,10 +123,10 @@ def sublimate_and_connect(
     hub-connect the facts side.
 
     The split is the STRSTARTS filter of ontocast's
-    ``agent/sublimate_ontology.py`` (see ``operators/sublimate.py``): a
-    triple is a fact when its subject, predicate or IRI object lies in
-    the chunk namespace ``chunk_ns``. Facts come back sorted; the
-    addendum keeps extraction order.
+    ``agent/sublimate_ontology.py:31-72``: a triple is a fact when its
+    subject, predicate or IRI object lies in the chunk namespace
+    ``chunk_ns``. Facts come back sorted; the addendum keeps
+    extraction order.
     """
     facts, onto = [], []
     for t in triples:

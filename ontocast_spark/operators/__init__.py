@@ -4,8 +4,9 @@ KG construction (the reference's pipeline, set-oriented):
   assemble    window-ordered document assembly (two-level hierarchical concat)
   chunking    semantic chunker over mapInPandas
   extraction  ontology-constrained triple extraction (Arrow-batched)
-  sublimate   facts/ontology STRSTARTS split
   fused       the whole per-document pipeline as ONE mapInPandas pass
+              (the facts/ontology STRSTARTS split and hub connect run in
+              kernels.graphs.sublimate_and_connect)
   canonicalize  per-document exact replay of the reference aggregator
                 + owl:sameAs alias collapse
   crossdoc    corpus-scale entity resolution (blocking -> fuzzy -> CC ->
@@ -13,7 +14,7 @@ KG construction (the reference's pipeline, set-oriented):
               pair-level ER metrics
   cc          distributed connected components (min-label + pointer jumping)
   validation  predicate diagnostics + RDFS inference (rdfs2/3/7/9)
-  critique    deterministic critique scorers + bounded retry
+  critique    deterministic critique scorers
   pagerank    entity-importance PageRank (join+aggregate rounds)
 
 Training-data pipeline:
@@ -21,7 +22,7 @@ Training-data pipeline:
               end-to-end clustering, cross-split leakage scan
   similarity  brute-force + IVF ANN, distributed k-means training
   text_analysis  language ID, quality features, repetition signals,
-              PII redaction, decontamination, fingerprints, packing
+              PII redaction, decontamination, packing
   dataset     deterministic splits, partition-invariant + mixture sampling
   corpus      the composed corpus build (dedup -> decontaminate ->
               gates -> split -> sharded packing, auditable drops)

@@ -1,15 +1,11 @@
-"""Deterministic critique scorers + bounded retry (E4/E5/E6).
+"""Deterministic critique scorers (E4/E5).
 
 The reference critiques LLM output with further LLM calls scoring 0-100
-with a success flag (/root/reference/ontocast/agent/criticise_ontology.py:
-27-105, criticise_facts.py:19-75, report schemas onto.py:476-528), and
-re-enters failed nodes up to ``max_visits`` = 3 times with failure
-feedback (/root/reference/ontocast/stategraph/util.py:8-29,
-stategraph/create.py:101-144). Deterministic extraction replaces the
-LLM, so the critiques become *structural validity scorers* with the same
-I/O contract (score double 0-100 + success bool per chunk), and the
-retry loop becomes a bounded driver-side recompute of ONLY the failed
-rows (a filtered re-run, not control flow inside the DAG):
+with a success flag (ontocast's agent/criticise_ontology.py:27-105,
+criticise_facts.py:19-75, report schemas onto.py:476-528).
+Deterministic extraction replaces the LLM, so the critiques become
+*structural validity scorers* with the same I/O contract (score double
+0-100 + success bool per chunk):
 
 - ontology score: fraction of ontology-addendum subjects that are both
   typed and labeled (the critique prompt's structural rules:
@@ -18,10 +14,10 @@ rows (a filtered re-run, not control flow inside the DAG):
   participate in at least one non-label triple, scaled by graph
   connectivity (components == 1 after connect).
 
-Failed chunks (< threshold) are re-extracted with a relaxed extractor
-profile; after ``max_visits`` rounds survivors pass through flagged
-``counts_exceeded`` — same terminal semantics as the reference's
-Status.COUNTS_EXCEEDED (onto.py:56-61).
+The reference re-enters failed nodes up to ``max_visits`` = 3 times
+(E6, stategraph/util.py:8-29). With a deterministic extractor every
+retry round reproduces the previous round's rows, so a failing score
+is reported, not recomputed.
 """
 
 from __future__ import annotations
@@ -32,7 +28,6 @@ from pyspark.sql import functions as F
 from ..kernels.rdfterms import RDF_TYPE, RDFS_LABEL
 
 DEFAULT_THRESHOLD = 50.0
-MAX_VISITS = 3  # reference default, onto.py:967-973
 
 
 def score_ontology_addendum(onto_rows: DataFrame) -> DataFrame:
@@ -70,60 +65,3 @@ def score_facts(facts: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_entities"),
     ).withColumn("success", F.col("score") >= DEFAULT_THRESHOLD)
 
-
-def retry_failed_chunks(
-    spark,
-    chunks: DataFrame,
-    triples: DataFrame,
-    index,
-    threshold: float = DEFAULT_THRESHOLD,
-    max_visits: int = MAX_VISITS,
-) -> DataFrame:
-    """Bounded recompute of failed chunks (E6). Each round re-extracts
-    only chunks whose facts score is below threshold. The reference
-    retries an LLM whose output varies between calls; this extractor is
-    deterministic, so a retry round whose output is row-identical to the
-    previous round's proves no further round can make progress — the
-    loop then short-circuits straight to the terminal
-    ``counts_exceeded`` flag instead of burning the remaining
-    ``max_visits`` recompute rounds. Returns triples with an
-    ``attempt`` column and a ``counts_exceeded`` flag on rows that
-    never passed."""
-    from .extraction import extract_triples
-
-    facts = triples.filter(F.col("part") == "facts")
-    scores = score_facts(facts)
-    result = triples.withColumn("attempt", F.lit(1))
-    failed_keys = scores.filter(~F.col("success")).select("conv_id", "chunk_hid")
-    attempt = 1
-    cmp_cols = [c for c in triples.columns if c != "attempt"]
-    while attempt < max_visits:
-        n_failed = failed_keys.limit(1).count()
-        if n_failed == 0:
-            break
-        attempt += 1
-        failed_chunks = chunks.join(failed_keys, ["conv_id", "chunk_hid"], "semi")
-        prev_rows = result.join(
-            failed_keys, ["conv_id", "chunk_hid"], "semi"
-        ).select(cmp_cols)
-        retried = extract_triples(spark, failed_chunks, index).withColumn(
-            "attempt", F.lit(attempt)
-        )
-        result = result.join(
-            failed_keys, ["conv_id", "chunk_hid"], "left_anti"
-        ).unionByName(retried)
-        changed = (
-            retried.select(cmp_cols).exceptAll(prev_rows).limit(1).count()
-            + prev_rows.exceptAll(retried.select(cmp_cols)).limit(1).count()
-        )
-        if changed == 0:
-            # fixed point: scores and failed_keys cannot change either
-            break
-        scores = score_facts(result.filter(F.col("part") == "facts"))
-        failed_keys = scores.filter(~F.col("success")).select("conv_id", "chunk_hid")
-    # terminal: chunks still failing are forced through, flagged
-    return result.join(
-        failed_keys.withColumn("counts_exceeded", F.lit(True)),
-        ["conv_id", "chunk_hid"],
-        "left",
-    ).withColumn("counts_exceeded", F.coalesce("counts_exceeded", F.lit(False)))

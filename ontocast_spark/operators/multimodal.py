@@ -29,10 +29,8 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     StringType,
@@ -150,66 +148,3 @@ def extract_media_features(
         feature_batches, schema=MEDIA_FEATURES
     )
 
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Deterministic frame-sampling plan for video rows: which frame
-    indices to decode (metadata-only; decode itself is the stub above).
-    Pure column algebra — no UDF."""
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.expr(
-            f"sequence(0, greatest(coalesce(meta.n_frames, 1) - 1, 0), {every_n})"
-        ).alias("frame_indices"),
-    )
-
-
-RESIZED_MEDIA = StructType([
-    StructField("media_id", StringType(), True),
-    StructField("kind", StringType(), True),
-    StructField("width", IntegerType(), True),
-    StructField("height", IntegerType(), True),
-    StructField("payload", BinaryType(), True),
-])
-
-
-def resize_media(
-    media: DataFrame,
-    width: int = 224,
-    height: int = 224,
-    batch_limit: int = 64,
-) -> DataFrame:
-    """Resize plumbing for image rows: the Spark side (schema, Arrow
-    batch re-chunking so large blobs never blow a batch, metadata
-    columns) is real; the pixel transform itself is the same honest
-    codec boundary as :func:`extract_media_features` — a deterministic
-    truncate-or-pad fake stands in for Pillow's resample, preserving
-    the exact batch contract a real codec plugs into."""
-
-    target = width * height // 64  # fake payload budget, deterministic
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_limit):
-                part = pdf.iloc[start : start + batch_limit]
-                out = []
-                for payload in part["payload"]:
-                    raw = bytes(payload) if payload is not None else b""
-                    # STUB: real codec = decode -> resample(width, height)
-                    # -> re-encode; fake keeps determinism + size shape
-                    resized = (raw * (target // max(len(raw), 1) + 1))[:target]
-                    out.append(resized)
-                yield pd.DataFrame(
-                    {
-                        "media_id": part["media_id"].tolist(),
-                        "kind": part["kind"].tolist(),
-                        "width": [width] * len(part),
-                        "height": [height] * len(part),
-                        "payload": out,
-                    }
-                )
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "kind", "payload")
-        .mapInPandas(resize_batches, schema=RESIZED_MEDIA)
-    )

@@ -244,23 +244,6 @@ def ivf_topk(
     return _topk_per_query(scored, k)
 
 
-def normalize_embeddings(
-    df: DataFrame, vec_col: str = "embedding", out_col: str | None = None
-) -> DataFrame:
-    """L2-normalize an embedding column (JVM-side; cosine becomes a
-    plain dot product downstream — one reduction instead of three)."""
-    out_col = out_col or vec_col
-    nrm = _NORM.format(vec_col)
-    return df.withColumn(
-        out_col,
-        F.expr(
-            f"CASE WHEN {nrm} > 0 THEN "
-            f"transform({vec_col}, x -> CAST(CAST(x AS DOUBLE) / {nrm} AS FLOAT)) "
-            f"ELSE {vec_col} END"
-        ),
-    )
-
-
 def quantize_embeddings(
     df: DataFrame, vec_col: str = "embedding", out_col: str = "q_embedding"
 ) -> DataFrame:

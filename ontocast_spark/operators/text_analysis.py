@@ -1,7 +1,8 @@
 """Text analysis operators for training-data pipelines (all JVM-side
 column algebra unless noted): language ID, quality scoring, token
-counting, document fingerprinting. Mirrors the oracled forms in
-``ontocast_spark.queries`` as reusable operators.
+counting. Mirrors the oracled forms in ``ontocast_spark.queries`` as
+reusable operators; the document fingerprint is the oracled
+``queries.q_doc_fingerprint``.
 """
 
 from __future__ import annotations
@@ -259,22 +260,6 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
         )
         red = F.regexp_replace(red, pat, repl)
     return docs.select("*", *counts, red.alias("text_redacted"))
-
-
-def fingerprint_col(text: Column, gram: int = 8, stride: int = 8) -> Column:
-    """Rolling-hash fingerprint: min MD5 over stride-``stride``
-    ``gram``-grams (winnowing-lite; same formulation as the oracled
-    q_doc_fingerprint)."""
-    return F.expr(
-        f"array_min(transform(sequence(1, greatest(length({'{c}'}) - {gram - 1}, 1), "
-        f"{stride}), i -> md5(substring({'{c}'}, i, {gram}))))".format(c="__fp_text")
-    )
-
-
-def add_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("__fp_text", F.col(text_col)).withColumn(
-        "fingerprint", fingerprint_col(F.col("__fp_text"))
-    ).drop("__fp_text")
 
 
 def decontaminate(

@@ -1,135 +1,20 @@
-"""Connectivity validation + hub auto-connect (grouped pandas UDF).
+"""Predicate diagnostics and RDFS inference over triple tables.
 
-Standalone form of the fused step in ``extraction.py``: groups the facts
-triples by chunk and applies the pure connectivity kernel
-(/root/reference/ontocast/tool/validate.py:94-155, 283-379 re-expressed
-in :mod:`ontocast_spark.kernels.graphs`). Chunk graphs are tiny (at most
-a few hundred triples), so one group = one cheap in-memory BFS; the
-corpus-level parallelism comes from the grouping itself.
+- V4 predicate usage (:func:`predicate_violations`): label presence
+  per used predicate and domain/range usage-consistency, cf. the
+  reference's ``tool/validate.py:157-248``;
+- RDFS entailment: domain/range typing (rdfs2/rdfs3,
+  :func:`infer_types`), subclass types (rdfs9) and subproperty triples
+  (rdfs7) over the transitive closure of ``plans/bgp.py``.
 
-Prefer the fused path in production — this operator costs a shuffle on
-(conv_id, chunk_hid) that the fused extractor avoids.
+Chunk connectivity and hub auto-connect (``validate.py:94-155,
+250-379``) run inside the fused kernel, in
+:func:`ontocast_spark.kernels.graphs.sublimate_and_connect`.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-
-from ..kernels.graphs import connect_via_hub, connected_components
-from ..schemas import TRIPLES
-
-
-def connect_chunks(facts: DataFrame) -> DataFrame:
-    """facts triples -> hub-connected facts triples (same schema)."""
-
-    def connect_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        doc_iri = pdf["doc_iri"].iloc[0]
-        chunk_hid = pdf["chunk_hid"].iloc[0]
-        chunk_iri = pdf["chunk_iri"].iloc[0]
-        triples = {
-            (s, p, o, bool(lit), None if dt is None or pd.isna(dt) else dt)
-            for s, p, o, lit, dt in zip(
-                pdf["subj"], pdf["pred"], pdf["obj"],
-                pdf["obj_is_literal"], pdf["obj_datatype"],
-            )
-        }
-        connected = sorted(connect_via_hub(triples, chunk_iri))
-        return pd.DataFrame(
-            {
-                "conv_id": conv_id,
-                "doc_iri": doc_iri,
-                "chunk_hid": chunk_hid,
-                "chunk_iri": chunk_iri,
-                "subj": [t[0] for t in connected],
-                "pred": [t[1] for t in connected],
-                "obj": [t[2] for t in connected],
-                "obj_is_literal": [t[3] for t in connected],
-                "obj_datatype": [t[4] for t in connected],
-            }
-        )
-
-    return (
-        facts.select(
-            "conv_id", "doc_iri", "chunk_hid", "chunk_iri",
-            "subj", "pred", "obj", "obj_is_literal", "obj_datatype",
-        )
-        .groupBy("conv_id", "chunk_hid")
-        .applyInPandas(connect_group, schema=TRIPLES)
-    )
-
-
-def connectivity_report(facts: DataFrame) -> DataFrame:
-    """Per-chunk connectivity metrics (diagnostics), cf.
-    validate_connectivity (/root/reference/ontocast/tool/validate.py:250-281)."""
-
-    def report_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        triples = {
-            (s, p, o, bool(lit), dt)
-            for s, p, o, lit, dt in zip(
-                pdf["subj"], pdf["pred"], pdf["obj"],
-                pdf["obj_is_literal"], pdf["obj_datatype"],
-            )
-        }
-        comps = connected_components(triples)
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "chunk_hid": [pdf["chunk_hid"].iloc[0]],
-                "num_components": [len(comps)],
-                "total_entities": [sum(len(c) for c in comps)],
-                "largest_component_size": [max((len(c) for c in comps), default=0)],
-                "is_fully_connected": [len(comps) <= 1],
-            }
-        )
-
-    return facts.groupBy("conv_id", "chunk_hid").applyInPandas(
-        report_group,
-        schema=(
-            "conv_id string, chunk_hid string, num_components long, "
-            "total_entities long, largest_component_size long, "
-            "is_fully_connected boolean"
-        ),
-    )
-
-
-# -------------------------------------------------- V4: predicate usage
-def predicate_stats(triples: DataFrame) -> DataFrame:
-    """One-row predicate statistics, cf. ``predicate_stats`` in the
-    reference's validate_predicates (/root/reference/ontocast/tool/
-    validate.py:157-186). Counts are per-predicate (a predicate with
-    two labels counts once), which fixes the reference's per-triple
-    increment quirk; ``has_required_properties`` /
-    ``domain_range_consistent`` match the reference booleans."""
-    from pyspark.sql import functions as F
-
-    from ..kernels.rdfterms import RDFS_DOMAIN, RDFS_LABEL, RDFS_RANGE
-
-    used = triples.select("pred").distinct()
-    meta = triples.filter(
-        F.col("pred").isin(RDFS_LABEL, RDFS_DOMAIN, RDFS_RANGE)
-    ).select(F.col("subj").alias("p"), F.col("pred").alias("mpred"))
-    flags = (
-        used.join(F.broadcast(meta), used.pred == meta.p, "left")
-        .groupBy("pred")
-        .agg(
-            F.max((F.col("mpred") == RDFS_LABEL).cast("int")).alias("has_label"),
-            F.max((F.col("mpred") == RDFS_DOMAIN).cast("int")).alias("has_domain"),
-            F.max((F.col("mpred") == RDFS_RANGE).cast("int")).alias("has_range"),
-        )
-    )
-    viol = predicate_violations(triples)
-    n_viol = viol.filter(F.col("kind") != "missing_label").count()
-    return flags.agg(
-        F.count(F.lit(1)).alias("total_predicates"),
-        F.sum(F.coalesce("has_label", F.lit(0))).alias("with_labels"),
-        F.sum(F.coalesce("has_domain", F.lit(0))).alias("with_domains"),
-        F.sum(F.coalesce("has_range", F.lit(0))).alias("with_ranges"),
-        (F.min(F.coalesce("has_label", F.lit(0))) == 1).alias(
-            "has_required_properties"
-        ),
-    ).withColumn("domain_range_consistent", F.lit(n_viol == 0))
 
 
 def predicate_violations(triples: DataFrame) -> DataFrame:

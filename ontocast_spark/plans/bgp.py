@@ -25,10 +25,12 @@ Fuseki:
   an iterative-squaring transitive closure (`path_pairs`);
 - aggregates (COUNT/SUM/MIN/MAX/AVG/SAMPLE/GROUP_CONCAT) -> a native
   groupBy (`bgp_aggregate`);
-- FILTER builtins: BOUND/REGEX/STRSTARTS/STRENDS/CONTAINS over the
-  term strings, and isLiteral/isIRI/LANG/DATATYPE via term metadata
-  threaded through the solutions (``bind_term_meta=True``, joined
-  NULL-safely so untagged terms still unify);
+- FILTER builtins: BOUND/STRSTARTS over the term strings, and
+  isLiteral/isIRI/LANG/DATATYPE via term metadata threaded through the
+  solutions (``bind_term_meta=True``, joined NULL-safely so untagged
+  terms still unify); the SPARQL text front end (``plans/sparql.py``)
+  compiles the rest of the builtin library, REGEX and CONTAINS
+  included, inline;
 - CONSTRUCT / ASK / DESCRIBE (`bgp_construct` / `bgp_ask` /
   `bgp_describe`);
 - UPDATE: DELETE WHERE, DELETE{}/WHERE{}, INSERT DATA
@@ -1152,17 +1154,8 @@ def fn_bound(var: str):
     return F.col(var).isNotNull()
 
 
-def fn_regex(var: str, pattern: str):
-    """REGEX(?v, pattern) — Java regex, evaluated JVM-side."""
-    return F.col(var).rlike(pattern)
-
-
 def fn_strstarts(var: str, prefix: str):
     return F.col(var).startswith(prefix)
-
-
-def fn_contains(var: str, needle: str):
-    return F.col(var).contains(needle)
 
 
 def fn_is_literal(var: str):

@@ -55,12 +55,9 @@ def build_spark(
         # per-row operator then runs at 1/16 of machine parallelism).
         # 128 KB keeps small inputs parallel while leaving large-file
         # splitting governed by maxPartitionBytes exactly as before; for
-        # corpora of MANY tiny files raise it back via env (low open
-        # cost packs more files per task there).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", "131072"),
-        )
+        # corpora of MANY tiny files pass the 4 MB default back through
+        # ``extra_conf`` (a low open cost packs more files per task there).
+        .config("spark.sql.files.openCostInBytes", "131072")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

@@ -7,7 +7,7 @@ neo4j.py:211-412: ``owl:Ontology`` discovery by ``rdf:type``
 relationship to the typed ``:Resource`` node, then per-ontology graph
 reconstruction; writes MERGE ``:Resource {uri}`` nodes). The bolt
 driver is an optional dependency here — same pattern as the docling /
-Pillow / sentence-transformers hooks — so this module layers two
+Pillow hooks — so this module layers two
 transports behind one ``run(cypher, params)`` contract:
 
 1. :func:`register_bolt_client` — plug the real ``neo4j`` driver (or

@@ -167,41 +167,6 @@ def start_incremental_kg(
     )
 
 
-def turn_rate_monitor(stream: DataFrame, window: str = "1 minute") -> DataFrame:
-    """Windowed turn-rate aggregation (watermarked tumbling window) —
-    the standard late-data-tolerant stream metric."""
-    return (
-        stream.groupBy(F.window("ts", window), F.col("role"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "role",
-            "n_turns",
-        )
-    )
-
-
-def enrich_turns_static(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str = "conv_id",
-    how: str = "left",
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Stream-static enrichment join: attach a small static dimension
-    (conversation metadata, tenant routing, ontology assignment) to a
-    turn stream. The static side is re-read every micro-batch by
-    Structured Streaming's stream-static join semantics — so a dim
-    table updated in place is picked up on the next trigger without
-    restarting the query — and ``broadcast_dim`` keeps the join
-    shuffle-free on the stream side (a stateless map step per batch;
-    no watermark or state store involved, unlike stream-stream joins).
-    At cluster scale the stream side never repartitions: the dim
-    broadcasts to wherever the source partitions already are."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on=on, how=how)
-
-
 def stream_dedup_turns(
     stream: DataFrame,
     keys: tuple[str, ...] = ("conv_id", "turn_idx"),

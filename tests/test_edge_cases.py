@@ -387,10 +387,9 @@ def test_bgp_aggregate_and_builtins(spark):
         bgp_optional,
         bgp_select,
         fn_bound,
-        fn_contains,
-        fn_regex,
         fn_strstarts,
     )
+    from ontocast_spark.plans.sparql import sparql
 
     tri = spark.createDataFrame(
         [("a", "in", "g1"), ("b", "in", "g1"), ("c", "in", "g2"),
@@ -423,9 +422,12 @@ def test_bgp_aggregate_and_builtins(spark):
     # builtins
     assert {r["x"] for r in bgp_filter(opt, fn_bound("s")).collect()} == {"a", "b"}
     assert {r["x"] for r in bgp_filter(opt, ~fn_bound("s")).collect()} == {"c"}
-    assert {r["x"] for r in bgp_filter(base, fn_regex("x", "^[ab]$")).collect()} == {"a", "b"}
     assert {r["g"] for r in bgp_filter(base, fn_strstarts("g", "g1")).collect()} == {"g1"}
-    assert {r["x"] for r in bgp_filter(base, fn_contains("x", "c")).collect()} == {"c"}
+    # REGEX / CONTAINS compile inline in the SPARQL text front end
+    for cond, want in (('REGEX(STR(?x), "^[ab]$")', {"a", "b"}),
+                       ('CONTAINS(STR(?x), "c")', {"c"})):
+        q = f"SELECT ?x WHERE {{ ?x <in> ?g . FILTER({cond}) }}"
+        assert {r["x"] for r in sparql(tri, q).collect()} == want, cond
     # aggregate over a filtered solution set composes
     fagg = bgp_aggregate(
         bgp_filter(opt, fn_bound("s")), [],
@@ -767,42 +769,6 @@ def test_sparql_driver_queries_plan_hash_joins(spark):
             + plan.count("Scan ExistingRDD")
         assert bnlj <= inline, name
         assert "CartesianProduct" not in plan, name
-
-
-def test_bucketed_triple_store_star_join_is_shuffle_free(spark, tmp_path):
-    """write_triples_bucketed: a subject-star BGP (three patterns
-    sharing ?s) over the bucketed table plans with ZERO Exchange
-    operators — the bucketing pre-pays the only shuffle subject-keyed
-    access ever needs (the 100-TB quad-store layout)."""
-    from ontocast_spark.io import write_triples_bucketed
-    from ontocast_spark.plans.bgp import bgp_select
-
-    tri = spark.createDataFrame(
-        [(f"s{i % 50}", f"p{i % 3}", f"o{i}") for i in range(600)],
-        "subj string, pred string, obj string",
-    )
-    b = write_triples_bucketed(tri, "tri_bucketed_test", buckets=4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # at 100 TB no side broadcasts — disable the small-table shortcut
-    # so the plan shows what the bucketing buys on big data
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = bgp_select(b, [
-            ("?s", "p0", "?a"), ("?s", "p1", "?b"), ("?s", "p2", "?c"),
-        ])
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 0
-        assert "SelectedBucketsCount" in plan  # the bucketed scan
-        # and it computes the right thing
-        brute = bgp_select(tri, [
-            ("?s", "p0", "?a"), ("?s", "p1", "?b"), ("?s", "p2", "?c"),
-        ])
-        got = {tuple(r) for r in out.collect()}
-        want = {tuple(r) for r in brute.collect()}
-        assert got == want and got
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS tri_bucketed_test")
 
 
 def test_graph_partitioned_store_prunes_partitions(spark, tmp_path):

@@ -287,40 +287,6 @@ def test_complex_predicates():
     assert pmap[ns1 + "parentOf"] == pmap[ns2 + "isParentOf"]
 
 
-def test_embedder_hook_and_fallback():
-    """C3 optional-dependency hook: a registered batch embedder drives
-    the chunker's breakpoint math; cleared, the deterministic hashed
-    fallback returns (sentence-transformers absent in this env)."""
-    import numpy as np
-
-    from ontocast_spark.kernels import chunker
-
-    text = "# One\n\nalpha beta gamma\n\n# Two\n\ndelta epsilon zeta\n\n# Three\n\neta theta iota"
-    baseline = chunker.split_text(text, min_chunk_size=None)
-
-    calls = []
-
-    def fake(texts):
-        calls.append(len(texts))
-        # orthogonal alternation -> consecutive distance 1.0 everywhere
-        return np.array(
-            [[1.0, 0.0] if i % 2 == 0 else [0.0, 1.0]
-             for i in range(len(texts))]
-        )
-
-    chunker.register_embedder(fake)
-    try:
-        assert chunker.active_embedder() is fake
-        hooked = chunker.split_text(text, min_chunk_size=None)
-        assert calls and calls[0] > 1  # the hook actually embedded
-        assert "".join(hooked).replace(" ", "") == "".join(baseline).replace(" ", "")
-    finally:
-        chunker.register_embedder(None)
-    assert chunker.active_embedder() is None
-    # fallback is unchanged and deterministic
-    assert chunker.split_text(text, min_chunk_size=None) == baseline
-
-
 def test_hash_embed_windows_matches_naive_combine():
     """The vectorized window embedding (_hash_embed_windows) must be
     bit-identical to hash_embed over _combine_sentences, including the

@@ -1,21 +1,21 @@
-"""Spark-level tests: assembly equality, golden counts through the
-Spark operators, and the end-to-end pipeline on the synthetic corpus."""
+"""Spark-level tests: assembly equality, the reference goldens through
+the production sublimate + connect kernel and the Spark canonicalizer,
+and the end-to-end pipeline on the synthetic corpus."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ontocast_spark.kernels.rdfterms import render_text_hash
+from ontocast_spark.kernels.graphs import connected_components, sublimate_and_connect
+from ontocast_spark.kernels.rdfterms import RDFS_LABEL, render_text_hash
 from ontocast_spark.ontology import builtin_ontology_index
 from ontocast_spark.operators.assemble import assemble_documents
 from ontocast_spark.operators.canonicalize import canonicalize_combined
 from ontocast_spark.operators.chunking import chunk_documents
 from ontocast_spark.operators.extraction import extract_triples
-from ontocast_spark.operators.sublimate import split_facts_ontology
-from ontocast_spark.operators.validation import connect_chunks, connectivity_report
 from ontocast_spark.schemas import CONVERSATIONS, TRIPLES
 from ontocast_spark.synth import gen_corpus
-from tests.test_kernels_golden import DOMAIN, sample_chunk
+from tests.test_kernels_golden import DOMAIN, iri_triple, lit_triple, sample_chunk
 
 
 @pytest.fixture(scope="module")
@@ -57,24 +57,21 @@ def test_chunking_ids_and_coverage(spark, conversations):
     assert chunks.groupby("conv_id")["chunk_idx"].min().eq(0).all()
 
 
-def _golden_triples_df(spark):
-    rows = []
+def _sublimated(chunk_id: str, extra=()):
+    """The reference sample chunk (plus ``extra`` triples) through the
+    production sublimate + hub-connect kernel:
+    (chunk_iri, input, facts, onto)."""
+    chunk_iri, triples = sample_chunk(chunk_id)
+    triples = triples + list(extra)
+    facts, onto = sublimate_and_connect(triples, chunk_iri, chunk_iri + "/")
+    return chunk_iri, triples, facts, onto
+
+
+def test_spark_connect_golden_10():
     for chunk_id in ("abc123", "def456"):
-        chunk_iri, triples = sample_chunk(chunk_id)
-        for s, p, o, lit, dt in triples:
-            rows.append(
-                ("conv0", f"{DOMAIN}/doc/123", chunk_id, chunk_iri, s, p, o, lit, dt)
-            )
-    return spark.createDataFrame(rows, schema=TRIPLES)
-
-
-def test_spark_connect_golden_10(spark):
-    facts = _golden_triples_df(spark)
-    connected = connect_chunks(facts)
-    counts = connected.groupBy("chunk_hid").count().collect()
-    assert sorted(r["count"] for r in counts) == [10, 10]
-    report = connectivity_report(connected).collect()
-    assert all(r["is_fully_connected"] for r in report)
+        _, _, facts, _ = _sublimated(chunk_id)
+        assert len(facts) == 10
+        assert len(connected_components(facts)) == 1
 
 
 def test_spark_canonicalize_golden_22(spark):
@@ -87,26 +84,28 @@ def test_spark_canonicalize_golden_22(spark):
     """
     rows = []
     for chunk_id in ("abc123", "def456"):
-        chunk_iri, triples = sample_chunk(chunk_id)
-        for s, p, o, lit, dt in triples:
-            rows.append(
-                ("conv0", f"{DOMAIN}/123", chunk_id, chunk_iri, s, p, o, lit, dt)
-            )
+        chunk_iri, _, facts, _ = _sublimated(chunk_id)
+        rows += [("conv0", f"{DOMAIN}/123", chunk_id, chunk_iri, *t) for t in facts]
     facts = spark.createDataFrame(rows, schema=TRIPLES)
-    connected = connect_chunks(facts)
-    agg = canonicalize_combined(connected).filter(F.col("row_kind") == "triple")
+    agg = canonicalize_combined(facts).filter(F.col("row_kind") == "triple")
     out = agg.collect()
     assert len(out) == 22
 
 
-def test_sublimate_split_is_partition(spark):
-    facts = _golden_triples_df(spark)
-    f, o = split_facts_ontology(facts)
-    nf, no, nt = f.count(), o.count(), facts.count()
-    assert nf + no == nt
-    # label triples with chunk-ns subjects are facts; nothing in the
-    # sample graph lives outside the chunk namespace
-    assert no == 0
+def test_sublimate_split_is_partition():
+    for chunk_id in ("abc123", "def456"):
+        # nothing in the sample graph lives outside the chunk namespace
+        chunk_iri, triples, facts, onto = _sublimated(chunk_id)
+        assert onto == [] and set(triples) <= set(facts)
+        # outside it: an IRI object inside the namespace makes a fact, a
+        # literal that merely spells one does not
+        ns = chunk_iri + "/"
+        linked = iri_triple(f"{DOMAIN}/onto/Thing", f"{DOMAIN}/onto/about", ns + "person1")
+        foreign = lit_triple(f"{DOMAIN}/onto/Thing", RDFS_LABEL, ns + "person1")
+        _, triples, facts, onto = _sublimated(chunk_id, [linked, foreign])
+        assert onto == [foreign]
+        assert set(triples) - set(onto) <= set(facts)
+        assert not set(facts) & set(onto)
 
 
 def test_end_to_end_pipeline(spark, conversations):

@@ -11,7 +11,6 @@ from ontocast_spark.schemas import CONVERSATIONS
 from ontocast_spark.streaming.stream import (
     start_incremental_kg,
     stream_conversations_from_files,
-    turn_rate_monitor,
 )
 from ontocast_spark.synth import gen_corpus
 
@@ -66,17 +65,6 @@ def test_incremental_kg_stream(spark, tmp_path):
         .count().filter(F.col("count") > 1).count()
     )
     assert dup == 0  # replayed conversation did not double-write
-
-
-def test_turn_rate_monitor_plan(spark, tmp_path):
-    in_dir = str(tmp_path / "turns2")
-    spark.createDataFrame(
-        gen_corpus(2, seed=1, mega_every=0), CONVERSATIONS
-    ).write.mode("overwrite").parquet(in_dir)
-    stream = stream_conversations_from_files(spark, in_dir, CONVERSATIONS)
-    agg = turn_rate_monitor(stream)
-    assert agg.isStreaming
-    assert set(agg.columns) == {"window_start", "role", "n_turns"}
 
 
 def test_quiet_for_gate_assembles_split_conversations(spark, tmp_path):
@@ -208,53 +196,6 @@ def test_stateful_session_assembly(spark, tmp_path):
     assert a["text"] == batch["text"]
     assert a["doc_hid"] == batch["doc_hid"]
     assert a["doc_iri"] == batch["doc_iri"]
-
-
-def test_enrich_turns_static(spark, tmp_path):
-    """Stream-static broadcast join: turns enrich against a static dim
-    without shuffling the stream side, and unmatched conversations
-    keep NULLs (left join)."""
-    import datetime as dt
-
-    from ontocast_spark.schemas import CONVERSATIONS
-    from ontocast_spark.streaming.stream import (
-        enrich_turns_static,
-        stream_conversations_from_files,
-    )
-
-    src = str(tmp_path / "turns")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        ("c1", 0, "user", "hi", None, t0),
-        ("c2", 0, "user", "yo", None, t0),
-    ]
-    spark.createDataFrame(rows, schema=CONVERSATIONS).coalesce(1)\
-        .write.parquet(src)
-    dim = spark.createDataFrame(
-        [("c1", "tenant-a")], "conv_id string, tenant string"
-    )
-    stream = stream_conversations_from_files(spark, src, CONVERSATIONS)
-    enriched = enrich_turns_static(stream, dim)
-    # plan evidence (batch form of the same operator): the dim side
-    # broadcasts — no exchange on the big side
-    batch_plan = (
-        enrich_turns_static(spark.read.parquet(src), dim)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in batch_plan, batch_plan
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["conv_id"], r["tenant"])
-           for r in spark.read.parquet(out_dir).collect()}
-    assert got == {("c1", "tenant-a"), ("c2", None)}
 
 
 def test_stream_dedup_turns(spark, tmp_path):

@@ -18,7 +18,7 @@ from ontocast_spark.operators.similarity import (
     ivf_topk,
     train_ivf_centroids,
 )
-from ontocast_spark.operators.text_analysis import add_fingerprint, quality_features
+from ontocast_spark.operators.text_analysis import quality_features
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -156,8 +156,6 @@ def test_quality_and_fingerprint(spark, docs):
     assert row["q_n_tokens"] == 12
     assert row["q_lang"] == "en"
     assert 0 < row["q_uniq_ratio"] <= 1.0
-    fp = add_fingerprint(docs.limit(20))
-    assert fp.filter(F.col("fingerprint").isNull()).count() == 0
 
 
 def test_multimodal_plumbing(spark):
@@ -235,23 +233,14 @@ def test_dataset_split_and_sample(spark):
 
 
 def test_embedding_normalize_quantize(spark):
-    """L2-normalize then int8-quantize: unit norms, q in [-128, 127],
-    dequantized vector close to the original, and both ops
-    deterministic column algebra (same result under repartition)."""
-    from ontocast_spark.operators.similarity import (
-        normalize_embeddings,
-        quantize_embeddings,
-    )
+    """int8-quantize raw vectors: q in [-128, 127], the max component
+    hits full scale, the dequantized vector is close to the original,
+    and the op is deterministic column algebra (same result under
+    repartition)."""
+    from ontocast_spark.operators.similarity import quantize_embeddings
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(50)
-    norm = normalize_embeddings(emb)
-    norms = norm.selectExpr(
-        "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * x), "
-        "0D, (a, x) -> a + x)) AS n"
-    ).collect()
-    assert all(abs(r["n"] - 1.0) < 1e-5 for r in norms)
-
-    q = quantize_embeddings(norm)
+    q = quantize_embeddings(emb)
     row = q.first()
     vals = list(row["q_embedding"])
     assert all(-128 <= v <= 127 for v in vals)
@@ -265,7 +254,7 @@ def test_embedding_normalize_quantize(spark):
         "vec_id",
         "aggregate(q_embedding, 0L, (acc, x) -> acc + CAST(x AS BIGINT)) AS s",
     ).collect()
-    b = quantize_embeddings(normalize_embeddings(emb.repartition(13))).selectExpr(
+    b = quantize_embeddings(emb.repartition(13)).selectExpr(
         "vec_id",
         "aggregate(q_embedding, 0L, (acc, x) -> acc + CAST(x AS BIGINT)) AS s",
     ).collect()
@@ -328,20 +317,6 @@ def test_pack_sequences_matches_sequential_simulation(spark):
             n = len(text.split())
             assert got[doc_id] == (start // 64, start % 64), (seed, doc_id)
             start += n
-
-
-def test_frame_sample_plan(spark):
-    from ontocast_spark.operators.multimodal import frame_sample_plan
-
-    media = spark.createDataFrame(
-        [("v1", "video", {"n_frames": 25}),
-         ("v2", "video", {"n_frames": 1}),
-         ("i1", "image", {"n_frames": 0})],
-        "media_id string, kind string, meta map<string,int>",
-    )
-    plan = {r["media_id"]: list(r["frame_indices"])
-            for r in frame_sample_plan(media, every_n=10).collect()}
-    assert plan == {"v1": [0, 10, 20], "v2": [0]}  # image rows excluded
 
 
 def test_build_training_corpus(spark):
@@ -430,22 +405,6 @@ def test_corpus_packing_is_sharded(spark):
         for r in sorted(rows_in_shard, key=lambda r: r["doc_id"]):
             assert (r["seq_id"], r["offset_in_seq"]) == (start // 64, start % 64)
             start += r["n_tokens"]
-
-
-def test_resize_media_plumbing(spark):
-    from ontocast_spark.operators.multimodal import resize_media
-
-    media = spark.createDataFrame(
-        [("m1", "image", bytearray(b"\x89PNG bytes")),
-         ("m2", "audio", bytearray(b"RIFF")),
-         ("m3", "image", None)],
-        "media_id string, kind string, payload binary",
-    )
-    out = {r["media_id"]: (r["width"], r["height"], len(bytes(r["payload"])))
-           for r in resize_media(media, width=64, height=64).collect()}
-    assert set(out) == {"m1", "m3"}  # non-image rows excluded
-    assert out["m1"] == (64, 64, 64)
-    assert out["m3"][2] == 0  # NULL payload degrades to empty, no crash
 
 
 def test_repetition_signals(spark):

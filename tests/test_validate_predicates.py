@@ -10,10 +10,7 @@ from ontocast_spark.kernels.rdfterms import (
     RDFS_LABEL,
     RDFS_RANGE,
 )
-from ontocast_spark.operators.validation import (
-    predicate_stats,
-    predicate_violations,
-)
+from ontocast_spark.operators.validation import predicate_violations
 
 T = "subj string, pred string, obj string, obj_is_literal boolean"
 
@@ -69,17 +66,6 @@ def test_violations_mirror_reference_semantics(spark):
     assert all(n != EX + "acme" for n, _, _ in rng)
 
 
-def test_stats_row(spark):
-    row = predicate_stats(_triples(spark)).collect()[0]
-    # used predicates: worksFor, knows, rdf:type, rdfs:label/domain/range
-    assert row.total_predicates == 6
-    assert row.with_labels == 1
-    assert row.with_domains == 2
-    assert row.with_ranges == 1
-    assert row.has_required_properties is False
-    assert row.domain_range_consistent is False
-
-
 def test_consistent_graph_is_clean(spark):
     rows = [
         (EX + "p", RDFS_LABEL, "p", True),
@@ -90,10 +76,10 @@ def test_consistent_graph_is_clean(spark):
         (EX + "a", EX + "p", EX + "b", False),
     ]
     df = spark.createDataFrame(rows, T)
-    kinds = {r.kind for r in predicate_violations(df).collect()}
-    assert "domain_violation" not in kinds and "range_violation" not in kinds
-    row = predicate_stats(df).collect()[0]
-    assert row.domain_range_consistent is True
+    out = predicate_violations(df).collect()
+    # only the unlabelled RDF/RDFS meta-predicates are flagged
+    assert {r.kind for r in out} == {"missing_label"}
+    assert EX + "p" not in {r.pred for r in out}
 
 
 def test_infer_types(spark):
