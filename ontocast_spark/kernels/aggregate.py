@@ -7,7 +7,7 @@ triple model of :mod:`ontocast_spark.kernels.graphs`.
 
 It processes ONE document's chunks per call (the reference's
 disambiguation scope is a single document). In Spark it runs inside the
-fused ``mapInPandas`` task of ``operators/fused.py``, once per document
+fused ``mapInArrow`` task (``kernels/construct.py``), once per document
 as the task streams its ``conv_id``-sorted turns: each document is small
 (a conversation's worth of triples) while the corpus-level parallelism
 is unbounded. The cross-document/scale variant (blocked candidate pairs

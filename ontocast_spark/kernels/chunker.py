@@ -12,8 +12,9 @@ but needs a model download; ours is seed-free, dependency-free, and
 stable across processes, which the resume/checkpoint contract requires.
 
 The whole kernel is document-local (no cross-row state), so in Spark it
-runs inside ``mapInPandas`` — one Arrow batch of documents in, one batch
-of chunk rows out, no per-row Python round trips.
+runs inside the fused ``mapInArrow`` task (``kernels/construct.py``) —
+Arrow batches of turns in, batches of KG rows out, no per-row Python
+round trips.
 """
 
 from __future__ import annotations

@@ -32,8 +32,8 @@ output: list of (s, p, o, o_is_literal, o_datatype) triples where
 
 Determinism is the point: same text + same ontology -> same triples,
 bit-stable across processes and reruns (EXTRACTOR_VERSION guards
-fixtures). Everything here is per-chunk local, so the Spark operator
-wraps it in ``mapInPandas`` over Arrow batches.
+fixtures). Everything here is per-chunk local, so it runs inside the
+fused ``mapInArrow`` task (``kernels/construct.py``).
 """
 
 from __future__ import annotations

@@ -11,9 +11,9 @@ Re-expressed public behavior:
 - hub auto-connect of disconnected components:
   /root/reference/ontocast/tool/validate.py:283-379
 
-These run inside ``mapInPandas`` tasks (one chunk graph per call — chunk
-graphs are small by construction), so they are plain-Python hot loops
-over at most a few hundred triples.
+These run inside the fused ``mapInArrow`` task (one chunk graph per
+call — chunk graphs are small by construction), so they are
+plain-Python hot loops over at most a few hundred triples.
 """
 
 from __future__ import annotations

@@ -4,8 +4,9 @@ KG construction (the reference's pipeline, set-oriented):
   assemble    window-ordered document assembly (two-level hierarchical concat)
   chunking    semantic chunker over mapInPandas
   extraction  ontology-constrained triple extraction (Arrow-batched)
-  fused       the whole per-document pipeline as ONE mapInPandas pass
-              (the facts/ontology STRSTARTS split and hub connect run in
+  fused       the whole per-document pipeline as ONE mapInArrow pass
+              (task body: kernels.construct.construct_batches;
+              the facts/ontology STRSTARTS split and hub connect run in
               kernels.graphs.sublimate_and_connect)
   canonicalize  per-document exact replay of the reference aggregator
                 + owl:sameAs alias collapse

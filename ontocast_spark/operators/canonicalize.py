@@ -32,17 +32,19 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernels.aggregate import ChunkGraph, aggregate_chunks
+from ..kernels.construct import COMBINED_ARROW_SCHEMA
 
 
 def _group_chunks(pdf: pd.DataFrame) -> list[ChunkGraph]:
     """Rebuild per-chunk graphs in DOCUMENT order (``chunk_idx``) when
     the column is present — greedy disambiguation and first-seen
     metadata are chunk-order-sensitive, and both the reference
-    aggregator and the fused path (fused.py) process chunks in document
-    order; content-hash order is only the fallback for callers that
-    dropped the index (round-2 ADVICE, medium)."""
+    aggregator and the fused path (kernels/construct.py) process chunks
+    in document order; content-hash order is only the fallback for
+    callers that dropped the index (round-2 ADVICE, medium)."""
     has_idx = "chunk_idx" in pdf.columns
     keyed: list[tuple] = []
     for (chunk_hid, chunk_iri), cpdf in pdf.groupby(
@@ -64,10 +66,7 @@ def _group_chunks(pdf: pd.DataFrame) -> list[ChunkGraph]:
     return [g for _, g in sorted(keyed, key=lambda kv: kv[0])]
 
 
-CANON_COMBINED_SCHEMA = (
-    "conv_id string, doc_iri string, row_kind string, subj string, "
-    "pred string, obj string, obj_is_literal boolean, obj_datatype string"
-)
+CANON_COMBINED_SCHEMA = from_arrow_schema(COMBINED_ARROW_SCHEMA)
 
 
 def canonicalize_combined(facts: DataFrame) -> DataFrame:

@@ -5,7 +5,7 @@ reference's whole langgraph state machine,
 Stage graph (each stage is set-oriented over the whole corpus — the
 reference's per-document/per-chunk loops disappear)::
 
-    conversations ──repartition(conv_id)+sort──▶ one mapInPandas pass
+    conversations ──repartition(conv_id)+sort──▶ one mapInArrow pass
         (assemble, chunk, select, extract, sublimate, connect,
          canonicalize: operators/fused.kg_construct_fused_turns)
         ──▶ kg_canon{triple, entity_map, predicate_map, ontology}
@@ -14,7 +14,7 @@ reference's per-document/per-chunk loops disappear)::
 
 Shuffle budget (what actually moves at 100 TB): ONE hash repartition
 of the raw turns on conv_id — every document-local stage runs inside
-the single downstream ``mapInPandas`` task. The staged operators
+the single downstream ``mapInArrow`` task. The staged operators
 (assemble -> chunk -> extract -> canonicalize) compute the same rows
 and serve as the test reference (tests/test_fused.py).
 The ontology-addendum dedup is a small distinct over ontology-namespace

@@ -19,8 +19,9 @@ semantics = conjunctive queries over the triple relation). The module
 covers the full query/update verb surface the reference delegates to
 Fuseki:
 
-- OPTIONAL / UNION / FILTER -> left joins / unionByName / Catalyst
-  predicates (`bgp_optional` / `bgp_union` / `bgp_filter`);
+- OPTIONAL / UNION / MINUS / EXISTS / FILTER -> left joins /
+  unionByName / anti and semi joins / Catalyst predicates (`sol_join` /
+  `sol_union` / `sol_minus` / `sol_exists` / `bgp_filter`);
 - SPARQL 1.1 property paths (``rdfs:subClassOf+``-style) -> joins plus
   an iterative-squaring transitive closure (`path_pairs`);
 - aggregates (COUNT/SUM/MIN/MAX/AVG/SAMPLE/GROUP_CONCAT) -> a native
@@ -587,7 +588,7 @@ def sol_join(
     shared variable is nullable does the join need a compatibility
     scan — and then the all-bound bulk is split off to a plain hash
     equi-join, leaving the nested-loop path to the NULL-carrying
-    remainder (mirroring :func:`bgp_minus`'s split-path plan)."""
+    remainder (mirroring :func:`sol_minus`'s split-path plan)."""
     ln = set(left_nullable) & set(left.columns)
     rn = set(right_nullable) & set(right.columns)
     shared = sorted(set(left.columns) & set(right.columns))
@@ -639,10 +640,9 @@ def sol_join(
 def sol_union(sols: list[DataFrame], distinct: bool = True) -> DataFrame:
     """Union solution sets by variable name: variables missing in one
     branch become NULL (unbound) columns, per SPARQL's UNION
-    semantics. ``distinct=True`` (the default, matching
-    :func:`bgp_union`) deduplicates; spec §18.5 UNION is a multiset
-    union, so bag-semantics callers (plain non-DISTINCT SELECT) pass
-    ``distinct=False``."""
+    semantics. ``distinct=True`` (the default) deduplicates; spec §18.5
+    UNION is a multiset union, so bag-semantics callers (plain
+    non-DISTINCT SELECT) pass ``distinct=False``."""
     if not sols:
         raise ValueError("empty solution union")
     all_vars = sorted({c for s in sols for c in s.columns})
@@ -669,53 +669,6 @@ def sol_union(sols: list[DataFrame], distinct: bool = True) -> DataFrame:
     return out.dropDuplicates() if distinct else out
 
 
-def bgp_optional(
-    result: DataFrame,
-    triples: DataFrame,
-    patterns: list[tuple[str, str, str]],
-    bind_term_meta: bool = False,
-    filters: list | None = None,
-) -> DataFrame:
-    """SPARQL OPTIONAL: left-join the solutions of ``patterns`` onto an
-    existing solution set — unmatched rows keep NULLs in the optional
-    variables (left outer join on the shared variables; term-metadata
-    columns, when bound, join NULL-safely like the BGP join).
-
-    ``filters`` are group-scoped Catalyst predicates — SPARQL's
-    ``OPTIONAL { P FILTER(expr) }`` is LeftJoin(A, P, expr), which
-    equals filtering P's solutions BEFORE the left join whenever expr
-    uses only P's variables (a left row whose only matches fail the
-    filter stays, with NULLs — NOT filter-after-join semantics)."""
-    opt = bgp_select(triples, patterns, distinct=True,
-                     bind_term_meta=bind_term_meta)
-    for cond in filters or []:
-        opt = opt.filter(cond)
-    if not set(result.columns) & set(opt.columns):
-        raise ValueError("OPTIONAL group shares no variable with the base")
-    return _join_solutions(result, opt, how="left")
-
-
-def bgp_union(
-    triples: DataFrame, groups: list
-) -> DataFrame:
-    """SPARQL UNION over pattern groups: solutions of each group,
-    unioned by variable name (missing variables become NULL columns,
-    per SPARQL's unbound semantics). Each group is either a pattern
-    list or a ``(patterns, filter_columns)`` pair — arm-scoped FILTERs
-    apply to that arm's solutions before the union (spec group
-    scoping)."""
-    if not groups:
-        raise ValueError("empty UNION")
-    sols = []
-    for g in groups:
-        pats, filts = g if isinstance(g, tuple) else (g, [])
-        s = bgp_select(triples, pats, distinct=True)
-        for cond in filts:
-            s = s.filter(cond)
-        sols.append(s)
-    return sol_union(sols)
-
-
 def _all_bound(shared: list[str]):
     cond = F.lit(True)
     for v in shared:
@@ -723,46 +676,24 @@ def _all_bound(shared: list[str]):
     return cond
 
 
-def bgp_minus(
-    result: DataFrame,
-    triples: DataFrame,
-    patterns: list[tuple[str, str, str]],
-    left_nullable: bool = True,
-    filters: list | None = None,
-) -> DataFrame:
-    """SPARQL ``MINUS``: remove solutions for which some solution of
-    ``patterns`` is compatible AND shares at least one bound variable
-    (SPARQL 1.1 §8.3.3). Spec corners honored: with NO shared variable
-    nothing is removed, and an UNBOUND (NULL, from OPTIONAL) value on
-    the left is compatible with anything but does not count toward the
-    domain overlap.
-
-    Scale: the probe side is a plain group in this engine's subset
-    (OPTIONAL is rejected inside MINUS bodies), so its solutions carry
-    no NULLs. A fully-bound left solution is then removed iff an equal
-    probe row exists on every shared variable — a plain hash
-    ``left_anti`` equi-join, never a nested-loop. Only left rows with
-    an actual NULL in a shared variable (possible only downstream of
-    OPTIONAL / UNION / VALUES UNDEF / BIND) take the general
-    compatibility path; with ``left_nullable=False`` (statically known
-    all-bound solutions) that branch is not even planned.
-
-    ``filters`` are group-scoped Catalyst predicates over the probe
-    group's own variables — the spec evaluates a MINUS group
-    independently, so they apply to the probe solutions before the
-    anti-join."""
-    minus = bgp_select(triples, patterns, distinct=True)
-    for cond in filters or []:
-        minus = minus.filter(cond)
-    return sol_minus(result, minus, left_nullable=left_nullable)
-
-
 def sol_minus(
     result: DataFrame, minus: DataFrame, left_nullable: bool = True
 ) -> DataFrame:
-    """:func:`bgp_minus` over a precompiled probe solution set (whose
-    solutions must be NULL-free — the compiler rejects nullable MINUS
-    bodies); same split-path hash ``left_anti`` plan."""
+    """SPARQL ``MINUS`` over a precompiled probe solution set: remove
+    solutions for which some probe solution is compatible AND shares
+    at least one bound variable (SPARQL 1.1 §8.3.3). Spec corners
+    honored: with NO shared variable nothing is removed, and an UNBOUND
+    (NULL, from OPTIONAL) value on the left is compatible with anything
+    but does not count toward the domain overlap.
+
+    Scale: the probe solutions must be NULL-free (the compiler rejects
+    nullable MINUS bodies). A fully-bound left solution is then removed
+    iff an equal probe row exists on every shared variable — a plain
+    hash ``left_anti`` equi-join, never a nested-loop. Only left rows
+    with an actual NULL in a shared variable (possible only downstream
+    of OPTIONAL / UNION / VALUES UNDEF / BIND) take the general
+    compatibility path; with ``left_nullable=False`` (statically known
+    all-bound solutions) that branch is not even planned."""
     shared = sorted(set(result.columns) & set(minus.columns))
     if not shared:
         return result
@@ -786,52 +717,27 @@ def sol_minus(
     return bound.unionByName(rest)
 
 
-def bgp_exists(
-    result: DataFrame,
-    triples: DataFrame,
-    patterns: list[tuple[str, str, str]],
-    negate: bool = False,
-    left_nullable: bool = True,
-    filters: list | None = None,
-) -> DataFrame:
-    """SPARQL ``FILTER EXISTS { P }`` / ``FILTER NOT EXISTS { P }``:
-    keep solutions for which the pattern has (no) match under the
-    current bindings — a semi (anti) join on the shared variables.
-    Spec substitution semantics (§8.1.1): only BOUND values
-    substitute, so an unbound (NULL, from OPTIONAL) shared variable
-    stays free in the pattern and is compatible with any probe value.
-    With NO shared variable the pattern is an independent probe —
-    expressed lazily as a ``limit(1)`` join so no Spark action runs at
-    plan-build time and the verdict recomputes per action like every
-    other construct here.
-
-    Scale: same split-path plan as :func:`bgp_minus` — probe solutions
-    are NULL-free (plain group), so fully-bound left rows ride a plain
-    hash ``left_semi``/``left_anti`` equi-join; only the NULL-carrying
-    remainder (empty unless OPTIONAL/UNION/UNDEF/BIND ran upstream)
-    keeps the nested-loop compatibility condition, and
-    ``left_nullable=False`` removes that branch from the plan.
-
-    ``filters`` are group-scoped Catalyst predicates over the probe
-    group's own variables, applied to the probe solutions before the
-    join (exact because this subset rejects filters referencing
-    outer-bound variables)."""
-    probe = bgp_select(triples, patterns, distinct=True)
-    for cond in filters or []:
-        probe = probe.filter(cond)
-    return sol_exists(result, probe, negate=negate,
-                      left_nullable=left_nullable)
-
-
 def sol_exists(
     result: DataFrame,
     probe: DataFrame,
     negate: bool = False,
     left_nullable: bool = True,
 ) -> DataFrame:
-    """:func:`bgp_exists` over a precompiled probe solution set (whose
-    solutions must be NULL-free — the compiler rejects nullable EXISTS
-    bodies); same split-path hash ``left_semi``/``left_anti`` plan."""
+    """SPARQL ``FILTER EXISTS { P }`` / ``FILTER NOT EXISTS { P }`` over
+    a precompiled probe solution set: keep solutions for which the
+    probe has (no) match under the current bindings — a semi (anti)
+    join on the shared variables. Spec substitution semantics (§8.1.1):
+    only BOUND values substitute, so an unbound (NULL, from OPTIONAL)
+    shared variable stays free and is compatible with any probe value.
+    With NO shared variable the probe is independent — expressed lazily
+    as a ``limit(1)`` join so no Spark action runs at plan-build time.
+
+    Scale: same split-path plan as :func:`sol_minus` — probe solutions
+    are NULL-free (the compiler rejects nullable EXISTS bodies), so
+    fully-bound left rows ride a plain hash ``left_semi``/``left_anti``
+    equi-join; only the NULL-carrying remainder keeps the nested-loop
+    compatibility condition, and ``left_nullable=False`` removes that
+    branch from the plan."""
     shared = sorted(set(result.columns) & set(probe.columns))
     how = "left_anti" if negate else "left_semi"
     if not shared:

@@ -134,14 +134,10 @@ from .bgp import (
     bgp_delete_where,
     bgp_describe,
     bgp_describe_resources,
-    bgp_exists,
     bgp_filter,
     bgp_insert_data,
     bgp_modify,
-    bgp_minus,
-    bgp_optional,
     bgp_select,
-    bgp_union,
     bgp_values,
     fn_bound,
     fn_datatype,

@@ -880,7 +880,7 @@ def q_kg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_doc_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracled invariant projection of q_kg_pipeline's input stage: the
     exact per-conversation document (doc_hid, n_turns, full text) the
-    pipeline's mapInPandas stage consumes, produced by the REAL
+    pipeline's mapInArrow stage consumes, produced by the REAL
     hierarchical assembly operator over the REAL q_kg_pipeline input
     derivation (_kg_conv, max_turns=200). The value-hash over the raw
     text column is the per-turn text-equality invariant of the north
@@ -3567,7 +3567,7 @@ ORACLES = {
     "q_simhash": ORACLE_SIMHASH,
     "q_ann_topk": ORACLE_ANN_TOPK,
     "q_select_ontology": ORACLE_SELECT_ONTOLOGY,
-    # q_kg_pipeline / q_crossdoc_canon: non-SQL-expressible (mapInPandas
+    # q_kg_pipeline / q_crossdoc_canon: non-SQL-expressible (mapInArrow
     # kernels / iterative fuzzy CC) -> rows-only check; their
     # SQL-expressible invariant projections ARE oracled:
     "q_kg_doc_invariant": ORACLE_KG_DOC_INVARIANT,

@@ -13,7 +13,7 @@ spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.session.timeZone","UTC")
          .appName("driveremu").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-sys.path.insert(0,"/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from ontocast_spark.queries import ORACLES, QUERIES
 
 con = duckdb.connect()

@@ -1,8 +1,11 @@
 #!/usr/bin/env python
 """Profile the document-local fused-kernel work (chunk -> select ->
-extract -> sublimate -> connect -> aggregate) single-threaded over the
-same synthetic corpus bench.py uses, without Spark. cProfile output
-tells us which kernel dominates q_kg_pipeline's Python cost."""
+extract -> sublimate -> connect -> aggregate -> emit) single-threaded
+over the same synthetic corpus bench.py uses, without Spark. It calls
+the fused task's own per-document kernel
+(``kernels.construct.construct_document``), so the profile is the task
+body minus Arrow I/O. cProfile output tells us which kernel dominates
+q_kg_pipeline's Python cost. Usage: profile_fused_kernel.py [N_DOCS]"""
 import cProfile
 import pstats
 import sys
@@ -13,11 +16,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ontocast_spark.synth import gen_conversation
 from ontocast_spark.ontology import builtin_ontology_index
-from ontocast_spark.kernels.aggregate import ChunkGraph, aggregate_chunks
-from ontocast_spark.kernels.chunker import chunk_document
-from ontocast_spark.kernels.extract import extract_chunk_triples
-from ontocast_spark.kernels.graphs import sublimate_and_connect
-from ontocast_spark.kernels.rdfterms import chunk_iri_for, iri2namespace, render_text_hash
+from ontocast_spark.kernels.chunker import MAX_CHUNK_SIZE, MIN_CHUNK_SIZE
+from ontocast_spark.kernels.construct import COMBINED_COLUMNS, construct_document
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
 
@@ -31,23 +31,11 @@ for i in range(N):
     docs.append((f"conv{i:08d}", f"https://example.com/doc/x{i}", text))
 
 def run():
-    n_triples = 0
+    out = {k: [] for k in COMBINED_COLUMNS}
     for conv_id, doc_iri, text in docs:
-        chunks = chunk_document(text or "")
-        chunk_graphs = []
-        onto_rows = set()
-        for chunk_text in chunks:
-            hid = render_text_hash(chunk_text)
-            chunk_iri = chunk_iri_for(doc_iri, hid)
-            chunk_ns = iri2namespace(chunk_iri)
-            ontology_id = idx.select_ontology(chunk_text)
-            triples = extract_chunk_triples(chunk_text, chunk_ns, idx, ontology_id)
-            facts, onto = sublimate_and_connect(triples, chunk_iri, chunk_ns)
-            onto_rows.update(onto)
-            chunk_graphs.append(ChunkGraph(hid, chunk_iri, facts))
-        agg, emap, pmap = aggregate_chunks(chunk_graphs, doc_iri)
-        n_triples += len(agg)
-    return n_triples
+        construct_document(conv_id, doc_iri, text, idx, out, None,
+                           MIN_CHUNK_SIZE, MAX_CHUNK_SIZE)
+    return out["row_kind"].count("triple")
 
 t0 = time.perf_counter()
 nt = run()

@@ -84,12 +84,8 @@ def test_bgp_select_semantics(spark):
 def test_bgp_optional_union_filter(spark):
     from pyspark.sql import functions as F
 
-    from ontocast_spark.plans.bgp import (
-        bgp_filter,
-        bgp_optional,
-        bgp_select,
-        bgp_union,
-    )
+    from ontocast_spark.plans.bgp import bgp_filter, bgp_select
+    from ontocast_spark.plans.sparql import sparql
 
     tri = spark.createDataFrame(
         [("a", "knows", "b"), ("b", "knows", "c"),
@@ -98,12 +94,14 @@ def test_bgp_optional_union_filter(spark):
     )
     base = bgp_select(tri, [("?x", "knows", "?y")])
     # OPTIONAL: ?x age ?age — only 'a' has one; 'b' keeps NULL
-    opt = {(r["x"], r["y"], r["age"]) for r in
-           bgp_optional(base, tri, [("?x", "age", "?age")]).collect()}
+    opt = {(r["x"], r["y"], r["age"]) for r in sparql(
+        tri, "SELECT ?x ?y ?age WHERE { ?x <knows> ?y . "
+             "OPTIONAL { ?x <age> ?age } }").collect()}
     assert opt == {("a", "b", "30"), ("b", "c", None)}
 
     # UNION of disjoint-variable groups -> NULL-padded columns
-    u = bgp_union(tri, [[("?x", "age", "?v")], [("?x", "name", "?n")]])
+    u = sparql(tri, "SELECT ?x ?v ?n WHERE { { ?x <age> ?v } "
+                    "UNION { ?x <name> ?n } }")
     rows = {(r["x"], r["v"], r["n"]) for r in u.collect()}
     assert rows == {("a", "30", None), ("c", None, "carol")}
 
@@ -113,7 +111,8 @@ def test_bgp_optional_union_filter(spark):
 
 
 def test_bgp_construct(spark):
-    from ontocast_spark.plans.bgp import bgp_construct, bgp_optional, bgp_select
+    from ontocast_spark.plans.bgp import bgp_construct, bgp_select
+    from ontocast_spark.plans.sparql import sparql
 
     tri = spark.createDataFrame(
         [("a", "knows", "b"), ("b", "knows", "c"), ("a", "age", "30")],
@@ -127,7 +126,8 @@ def test_bgp_construct(spark):
                    ("a", "rdf:type", "Agent"), ("b", "rdf:type", "Agent")}
 
     # NULL from an OPTIONAL var -> that instantiation is skipped
-    opt = bgp_optional(sols, tri, [("?x", "age", "?age")])
+    opt = sparql(tri, "SELECT ?x ?y ?age WHERE { ?x <knows> ?y . "
+                      "OPTIONAL { ?x <age> ?age } }")
     aged = {(r["subj"], r["pred"], r["obj"]) for r in bgp_construct(
         opt, [("?x", "has_age", "?age")]).collect()}
     assert aged == {("a", "has_age", "30")}
@@ -384,7 +384,6 @@ def test_bgp_aggregate_and_builtins(spark):
     from ontocast_spark.plans.bgp import (
         bgp_aggregate,
         bgp_filter,
-        bgp_optional,
         bgp_select,
         fn_bound,
         fn_strstarts,
@@ -398,7 +397,8 @@ def test_bgp_aggregate_and_builtins(spark):
         "subj string, pred string, obj string",
     )
     base = bgp_select(tri, [("?x", "in", "?g")])
-    opt = bgp_optional(base, tri, [("?x", "score", "?s")])
+    opt = sparql(tri, "SELECT ?x ?g ?s WHERE { ?x <in> ?g . "
+                      "OPTIONAL { ?x <score> ?s } }")
 
     # aggregates per group; c has no score -> count(?s)=0, avg NULL
     agg = bgp_aggregate(
