@@ -31,6 +31,7 @@ unaffected; reruns are bit-stable.
 
 from __future__ import annotations
 
+import codecs
 import sys
 from array import array
 from collections import defaultdict
@@ -208,7 +209,9 @@ def _find_similar_entities_py(
 
 
 _group_entities = load_group_entities()
-_UTF32 = "utf-32-le" if sys.byteorder == "little" else "utf-32-be"
+# looked up at import, so the codec module loads with this one (and is
+# preloaded with it by ontocast_spark.daemon), not at the first grouping
+_UTF32 = codecs.lookup("utf-32-le" if sys.byteorder == "little" else "utf-32-be").name
 _WORD = (1 << 64) - 1
 
 

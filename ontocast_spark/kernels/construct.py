@@ -12,9 +12,11 @@ function is pickled by reference, so a fresh Python worker imports only
 this module and the kernels it calls, on top of what ``pyspark.worker``
 already loaded. Output is built column-wise per document and leaves as
 ``pa.RecordBatch.from_pydict`` — no per-row appends, no pandas frame.
-pyarrow itself still imports pandas, lazily, the first time it converts
-a Python list (its pandas shim), so a fresh worker pays that import at
-its first emit.
+pyarrow itself imports pandas the first time it converts a Python list
+(its pandas shim); :mod:`ontocast_spark.daemon`, the daemon Spark forks
+workers from under ``build_spark`` on a local master, has already done
+that and imported this module, so a fresh worker pays neither at its
+first emit.
 """
 
 from __future__ import annotations

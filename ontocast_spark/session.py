@@ -7,12 +7,22 @@ sandbox everything runs on ``local[N]``. The confs below are the ones
 that matter at both scales:
 
 - AQE on (runtime coalescing + skew-join splitting),
-- Arrow execution for every pandas UDF stage (the whole extraction path
-  is Arrow-batched; per-row Python is banned by design),
+- Arrow for ``toPandas``/``createDataFrame`` too (the fused KG task is
+  a ``mapInArrow``, the other UDF stages are Arrow-batched; per-row
+  Python is banned by design),
 - bounded Arrow batch size so a mega-conversation document cannot blow
   an executor (cf. SURVEY.md §4 spill notes),
-- shuffle partitions sized for the local core count; on a real cluster
-  leave ``spark.sql.shuffle.partitions`` to AQE's coalescing.
+- ``local[N]`` over the CPUs this process may run on, unless
+  ``SPARK_GRAFT_CPUS`` says otherwise, and shuffle partitions sized to
+  match; on a real cluster leave ``spark.sql.shuffle.partitions`` to
+  AQE's coalescing,
+- on a local master, Python workers forked from
+  :mod:`ontocast_spark.daemon`, which imports pyarrow, pandas and the
+  kernels once per session instead of once per fresh worker (task).
+  The package root goes on the workers' ``PYTHONPATH`` so the daemon
+  imports wherever the driver was started. Other masters keep
+  ``pyspark.daemon``: their workers may not see this package until a
+  task ships it.
 """
 
 from __future__ import annotations
@@ -20,6 +30,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory (or zip) this package is imported from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_heap_gb() -> int:
@@ -33,7 +46,7 @@ def build_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
@@ -63,10 +76,10 @@ def build_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode runs every task thread in the driver JVM — size the
-        # heap for executor-grade work (128 GiB box; 48g leaves room for
-        # the 32 Python workers and tmpfs shuffle), but never past half
-        # the machine's RAM: on a 15 GiB box a 48g cap let the test
-        # suite's JVM grow to 15 GB and be OOM-killed
+        # heap for executor-grade work, capped at 48g to leave room for
+        # one Python worker per core and tmpfs shuffle, and never past
+        # half the machine's RAM: on a 15 GiB box a 48g cap let the
+        # test suite's JVM grow to 15 GB and be OOM-killed
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM", f"{_default_heap_gb()}g"))
         .config("spark.ui.enabled", "false")
@@ -78,6 +91,14 @@ def build_spark(
         builder = builder.config(
             "spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")
         )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        pythonpath = extra_conf.pop("spark.executorEnv.PYTHONPATH", None)
+        builder = (
+            builder.config("spark.python.daemon.module", "ontocast_spark.daemon")
+            .config("spark.executorEnv.PYTHONPATH",
+                    os.pathsep.join(filter(None, [_PACKAGE_ROOT, pythonpath])))
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
