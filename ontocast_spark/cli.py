@@ -102,8 +102,7 @@ def _cmd_canonicalize(argv) -> None:
     rewritten.write.mode("overwrite").parquet(f"{args.out}/rewritten")
     mapping.write.mode("overwrite").parquet(f"{args.out}/mapping")
     canonical_entity_meta(
-        spark.read.parquet(f"{args.out}/rewritten"),
-        spark.read.parquet(f"{args.out}/mapping"),
+        spark.read.parquet(f"{args.out}/rewritten")
     ).write.mode("overwrite").parquet(f"{args.out}/canon_meta")
     print(f"mapping rows: {spark.read.parquet(f'{args.out}/mapping').count()}")
 

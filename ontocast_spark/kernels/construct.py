@@ -33,6 +33,10 @@ from .extract import extract_chunk_triples
 from .graphs import sublimate_and_connect
 from .rdfterms import chunk_iri_for, iri2namespace, render_text_hash
 
+# Joins a conversation's turns into its document text; the staged
+# ``operators/assemble.assemble_documents`` re-exports it.
+TURN_SEPARATOR = "\n\n"
+
 # The combined-row format: one row per aggregated triple, entity/
 # predicate mapping and ontology-addendum triple, told apart by
 # ``row_kind``. The staged reference (``canonicalize_combined``) emits
@@ -58,17 +62,11 @@ def construct_document(
     idx: OntologyIndex,
     out: dict[str, list],
     max_chunks: int | None,
-    min_chunk_size: int,
-    max_chunk_size: int,
 ) -> None:
     """Run the full document-local kernel chain (chunk -> select ->
     extract -> sublimate -> connect -> aggregate) for one document and
     extend the columns of ``out`` with its combined canon rows."""
-    chunks = chunk_document(
-        text or "",
-        min_chunk_size=min_chunk_size,
-        max_chunk_size=max_chunk_size,
-    )
+    chunks = chunk_document(text or "")
     if max_chunks is not None:
         chunks = chunks[:max_chunks]
     chunk_graphs: list[ChunkGraph] = []
@@ -106,10 +104,7 @@ def construct_batches(
     *,
     index,
     doc_prefix: str,
-    separator: str,
     max_chunks: int | None,
-    min_chunk_size: int,
-    max_chunk_size: int,
 ) -> Iterator[pa.RecordBatch]:
     """``mapInArrow`` body over one partition of ``(conv_id, text, ...)``
     batches sorted by ``conv_id`` then turn order. A conversation is a
@@ -122,11 +117,10 @@ def construct_batches(
     out: dict[str, list] = {k: [] for k in COMBINED_COLUMNS}
 
     def finish(conv_id: str, texts: list[str]) -> None:
-        text = separator.join(t for t in texts if t is not None)
+        text = TURN_SEPARATOR.join(t for t in texts if t is not None)
         doc_hid = hashlib.sha256(text.encode("utf-8")).hexdigest()[:12]
         construct_document(
-            conv_id, doc_prefix + doc_hid, text, idx, out,
-            max_chunks, min_chunk_size, max_chunk_size,
+            conv_id, doc_prefix + doc_hid, text, idx, out, max_chunks
         )
 
     def flush() -> pa.RecordBatch:

@@ -10,16 +10,19 @@ KG construction (the reference's pipeline, set-oriented):
               kernels.graphs.sublimate_and_connect)
   canonicalize  per-document exact replay of the reference aggregator
                 + owl:sameAs alias collapse
-  crossdoc    corpus-scale entity resolution (blocking -> fuzzy -> CC ->
-              collision-free minting -> rewrite; batch + incremental) and
-              pair-level ER metrics
-  cc          distributed connected components (min-label + pointer jumping)
+  crossdoc    corpus-scale entity resolution (blocking -> one pair scorer
+              -> CC -> collision-free minting -> rewrite; batch +
+              incremental) and pair-level ER metrics
+  cc          the resolvers' shared chain: capped blocks, blocked pairs,
+              distributed connected components (min-label + pointer
+              jumping)
   validation  predicate diagnostics + RDFS inference (rdfs2/3/7/9)
   critique    deterministic critique scorers
   pagerank    entity-importance PageRank (join+aggregate rounds)
 
 Training-data pipeline:
-  dedup       exact / MinHash-LSH / SimHash / embedding near-dup,
+  dedup       exact / MinHash-LSH / SimHash / embedding near-dup
+              (buckets through cc's capped blocks and blocked pairs),
               end-to-end clustering, cross-split leakage scan
   similarity  brute-force + IVF ANN, distributed k-means training
   text_analysis  language ID, quality features, repetition signals,

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TURN_SEPARATOR = "\n\n"
+from ..kernels.construct import TURN_SEPARATOR
 DEFAULT_BUCKET_SIZE = 1024
 
 

@@ -12,14 +12,16 @@ one task:
    longest rdfs:label (max-struct argmax, deterministic tie-break), the
    sorted rdf:type set, and the JVM-side local name.
 2. **Blocking**: candidate pairs are only generated inside block keys
-   (lower local name; lowercased label prefix). Oversized blocks —
-   skew! — are counted and dropped above ``max_block_size`` (logged via
-   the returned stats), the standard recall/cost dial of SparkER-style
-   blocking.
-3. **Pair scoring**: exact lowercase local-name equality is pure column
-   algebra; the fuzzy-label fallback is an Arrow-batched pandas UDF of
-   the same indel ratio as the reference (>= 85, >= 90 when types
-   shared, type-disjointness gate — aggregate.py:521-552).
+   (lower local name; label tokens), through the shared
+   ``cc.capped_blocks``/``cc.block_pairs``. Oversized blocks — skew! —
+   are dropped above ``max_block_size``, the standard recall/cost dial
+   of SparkER-style blocking. The drop is not counted yet (ROADMAP item
+   1 counts it at ``capped_blocks``).
+3. **Pair scoring** (:func:`score_pairs`, shared by the batch and
+   incremental paths): exact lowercase local-name equality is pure
+   column algebra; the fuzzy-label fallback is an Arrow-batched pandas
+   UDF of the same indel ratio as the reference (>= 85, >= 90 when
+   types shared, type-disjointness gate — aggregate.py:521-552).
 4. **Connected components** over match edges (operators/cc.py) replace
    the greedy single-pass grouping; transitive closure can merge more
    than the order-dependent greedy pass, which is the documented
@@ -36,8 +38,6 @@ one task:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 
 from ..kernels.rdfterms import RDF_TYPE, RDFS_LABEL
 from ..functions.iri import clean_local_name_expr, local_name_expr
-from .cc import connected_components
+from .cc import block_pairs, capped_blocks, connected_components
 
 SIMILARITY_THRESHOLD = 85.0
 SEMANTIC_THRESHOLD = 90.0
@@ -91,7 +91,7 @@ def _blocked_keys(
     max_block_size: int,
     handles: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """(bkey, entity, local_name, label, types) exploded block table.
+    """(bkey, id, ln, label, types) exploded block table, capped.
 
     Block keys: exact lowercase local name + every label token (>= 3
     chars) — token blocking keeps recall on "John Doe"/"J. Doe"-style
@@ -113,14 +113,12 @@ def _blocked_keys(
         F.transform(label_tokens, lambda t: F.concat(F.lit("tk:"), t)),
     )
     blocked = meta.select(
-        "entity", "local_name", "label", "types", F.explode(keys).alias("bkey")
+        F.col("entity").alias("id"), F.col("local_name").alias("ln"),
+        "label", "types", F.explode(keys).alias("bkey"),
     ).distinct().persist()
     if handles is not None:
         handles.append(blocked)
-    sizes = blocked.groupBy("bkey").agg(F.count(F.lit(1)).alias("bsize"))
-    return blocked.join(
-        F.broadcast(sizes.filter(F.col("bsize") <= max_block_size)), "bkey"
-    )
+    return capped_blocks(blocked, max_block_size)
 
 
 def candidate_pairs(
@@ -130,27 +128,7 @@ def candidate_pairs(
 ) -> DataFrame:
     """Blocked self-join -> distinct candidate (a, b) pairs with both
     sides' metadata. Oversized blocks are dropped (skew guard)."""
-    blocked = _blocked_keys(meta, max_block_size, handles)
-    a = blocked.select(
-        "bkey",
-        F.col("entity").alias("a"),
-        F.col("local_name").alias("ln_a"),
-        F.col("label").alias("label_a"),
-        F.col("types").alias("types_a"),
-    )
-    b = blocked.select(
-        "bkey",
-        F.col("entity").alias("b"),
-        F.col("local_name").alias("ln_b"),
-        F.col("label").alias("label_b"),
-        F.col("types").alias("types_b"),
-    )
-    return (
-        a.join(b, "bkey")
-        .filter(F.col("a") < F.col("b"))
-        .drop("bkey")
-        .dropDuplicates(["a", "b"])
-    )
+    return block_pairs(_blocked_keys(meta, max_block_size, handles))
 
 
 def _fuzz_ratio_udf():
@@ -186,31 +164,41 @@ def _fuzz_ratio_udf():
     return fuzz_ratio
 
 
-def match_edges(pairs: DataFrame, exact_only: bool = False) -> DataFrame:
-    """Score candidate pairs -> match edges (a, b). Same gates as the
-    reference greedy pass. ``exact_only`` keeps just the
-    lowercase-local-name-equality edges (no fuzzy pandas-UDF pass) —
-    the SQL-expressible sub-semantics the driver oracle pins."""
+def score_pairs(pairs: DataFrame, exact_only: bool = False) -> DataFrame:
+    """Candidate pairs -> scored matches (a, b, score), same gates as
+    the reference greedy pass: type-compatible pairs with equal
+    lowercase local names score 200.0; the rest score their fuzzy label
+    ratio and are kept at >= 85 (>= 90 when the types overlap).
+    ``exact_only`` keeps just the exact matches (no fuzzy pandas-UDF
+    pass) — the SQL-expressible sub-semantics the driver oracles pin."""
     share_type = F.arrays_overlap("types_a", "types_b")
     compatible = (
         (F.size("types_a") == 0) | (F.size("types_b") == 0) | share_type
     )
     exact = F.lower("ln_a") == F.lower("ln_b")
     gated = pairs.filter(compatible)
-    exact_edges = gated.filter(exact).select("a", "b")
+    scored = gated.filter(exact).select("a", "b", F.lit(200.0).alias("score"))
     if exact_only:
-        return exact_edges.distinct()
-    fuzzy_cand = gated.filter(
-        ~exact & F.col("label_a").isNotNull() & F.col("label_b").isNotNull()
-    )
+        return scored
     fuzz = _fuzz_ratio_udf()
     threshold = F.when(share_type, F.lit(SEMANTIC_THRESHOLD)).otherwise(
         F.lit(SIMILARITY_THRESHOLD)
     )
-    fuzzy_edges = fuzzy_cand.withColumn(
-        "score", fuzz(F.col("label_a"), F.col("label_b"))
-    ).filter(F.col("score") >= threshold).select("a", "b")
-    return exact_edges.union(fuzzy_edges).distinct()
+    fuzzy = (
+        gated.filter(
+            ~exact & F.col("label_a").isNotNull() & F.col("label_b").isNotNull()
+        )
+        .withColumn("score", fuzz(F.col("label_a"), F.col("label_b")))
+        .filter(F.col("score") >= threshold)
+        .select("a", "b", "score")
+    )
+    return scored.union(fuzzy)
+
+
+def match_edges(pairs: DataFrame, exact_only: bool = False) -> DataFrame:
+    """Candidate pairs -> distinct match edges (a, b) of
+    :func:`score_pairs`."""
+    return score_pairs(pairs, exact_only).select("a", "b").distinct()
 
 
 def _slot_pairs(names: DataFrame, include_self: bool = True) -> DataFrame:
@@ -458,9 +446,7 @@ def pairwise_er_metrics(
     return out
 
 
-def canonical_entity_meta(
-    rewritten_facts: DataFrame, mapping: DataFrame | None = None
-) -> DataFrame:
+def canonical_entity_meta(rewritten_facts: DataFrame) -> DataFrame:
     """(entity, local_name, label, types) for every entity surviving
     the rewrite — the side table an incremental pipeline persists
     between batches so later batches match against the KG without
@@ -472,9 +458,7 @@ def canonical_entity_meta(
     singleton must be able to adopt it (otherwise it re-mints a
     suffixed twin — r2 ADVICE low #2: the old semi-join on mapping
     canonicals silently excluded singletons, a cross-batch recall
-    divergence from batch mode). ``mapping`` is kept for API
-    compatibility and no longer consulted."""
-    del mapping
+    divergence from batch mode)."""
     # localCheckpoint (eager): the table is re-scanned by blocking and
     # matching in the NEXT batch, and — unlike persist — checkpointing
     # truncates the LOGICAL plan, so the next batch's optimizer does not
@@ -547,54 +531,16 @@ def incremental_canonicalize(
     )
 
     handles: list[DataFrame] = []
-    # --- step 2: two-sided block join new-unknown x existing-canon
-    nb = _blocked_keys(unknown, max_block_size, handles).select(
-        "bkey",
-        F.col("entity").alias("a"),
-        F.col("local_name").alias("ln_a"),
-        F.col("label").alias("label_a"),
-        F.col("types").alias("types_a"),
-    )
-    cb = _blocked_keys(canon_meta, max_block_size, handles).select(
-        "bkey",
-        F.col("entity").alias("b"),
-        F.col("local_name").alias("ln_b"),
-        F.col("label").alias("label_b"),
-        F.col("types").alias("types_b"),
-    )
-    # prune the canon side BEFORE its exchange: the KG's block table is
-    # corpus-proportional while the fresh batch's key set is tiny —
-    # broadcast the batch keys and semi-join so only canon rows sharing
-    # a key with this batch ever shuffle (without this, every
+    # --- step 2: two-sided block join new-unknown x existing-canon;
+    # block_pairs prunes the canon side to the batch's keys BEFORE its
+    # exchange: the KG's block table is corpus-proportional while the
+    # fresh batch's key set is tiny (without the prune every
     # incremental batch shuffles the whole KG's exploded block table)
-    nb_keys = nb.select("bkey").distinct()
-    cb = cb.join(F.broadcast(nb_keys), "bkey", "semi")
-    pairs = nb.join(cb, "bkey").drop("bkey").dropDuplicates(["a", "b"])
-    share_type = F.arrays_overlap("types_a", "types_b")
-    compatible = (
-        (F.size("types_a") == 0) | (F.size("types_b") == 0) | share_type
+    pairs = block_pairs(
+        _blocked_keys(unknown, max_block_size, handles),
+        _blocked_keys(canon_meta, max_block_size, handles),
     )
-    exact = F.lower("ln_a") == F.lower("ln_b")
-    gated = pairs.filter(compatible)
-    scored = gated.filter(exact).select(
-        "a", "b", F.lit(200.0).alias("score")
-    )
-    if not exact_only:
-        fuzz = _fuzz_ratio_udf()
-        threshold = F.when(share_type, F.lit(SEMANTIC_THRESHOLD)).otherwise(
-            F.lit(SIMILARITY_THRESHOLD)
-        )
-        fuzzy = (
-            gated.filter(
-                ~exact
-                & F.col("label_a").isNotNull()
-                & F.col("label_b").isNotNull()
-            )
-            .withColumn("score", fuzz(F.col("label_a"), F.col("label_b")))
-            .filter(F.col("score") >= threshold)
-            .select("a", "b", "score")
-        )
-        scored = scored.union(fuzzy)
+    scored = score_pairs(pairs, exact_only)
     w = Window.partitionBy("a").orderBy(F.col("score").desc(), F.col("b"))
     adopted = (
         scored.withColumn("rn", F.row_number().over(w))

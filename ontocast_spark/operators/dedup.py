@@ -13,9 +13,10 @@ First-class training-data-pipeline components over a
 - :func:`embedding_neardup` — cosine near-dup over an embedding column
   (LSH-bucketed via random-hyperplane signs, exact cosine verify).
 
-Scale notes: every candidate generator is a block/bucket self-join (no
-all-pairs); verification UDFs only see candidate pairs. Bucket sizes
-are capped (skew guard) like operators/crossdoc.py.
+Scale notes: every candidate generator is a bucket self-join through
+``cc.capped_blocks``/``cc.block_pairs`` (no all-pairs), the same one
+operators/crossdoc.py uses; verification only sees candidate pairs.
+Buckets above :data:`MAX_BUCKET` rows are dropped (skew guard).
 """
 
 from __future__ import annotations
@@ -24,7 +25,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_MAX_BUCKET = 512
+from .cc import block_pairs, capped_blocks, connected_components
+
+MAX_BUCKET = 512
+SHINGLE_N = 3  # word n-gram size of MinHash shingles and Jaccard verify
+SIMHASH_BITS = 32
+SIMHASH_BAND_BITS = 8
+EMBEDDING_PLANES = 8
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"):
@@ -49,7 +56,6 @@ def minhash_signature(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """(id, sig array<string>) — k seeded-MD5 min-hashes over word
     n-gram shingles, all built-in expressions.
@@ -67,8 +73,8 @@ def minhash_signature(
     slicing a materialized array attribute is O(n)."""
     prep = docs.withColumn("__toks", F.split(F.col(text_col), " "))
     shingles = (
-        f"transform(sequence(1, greatest(size(__toks)-{shingle_n - 1}, 1)), "
-        f"i -> array_join(slice(__toks, i, {shingle_n}), ' '))"
+        f"transform(sequence(1, greatest(size(__toks)-{SHINGLE_N - 1}, 1)), "
+        f"i -> array_join(slice(__toks, i, {SHINGLE_N}), ' '))"
     )
     sig = F.expr(
         f"aggregate("
@@ -86,7 +92,6 @@ def minhash_lsh_candidates(
     id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Banded LSH over MinHash signatures -> candidate (a, b) pairs."""
     rows_per_band = num_hashes // bands
@@ -110,18 +115,7 @@ def minhash_lsh_candidates(
         ]
     )
     buckets = sig.select("id", F.explode(band_keys).alias("bkey")).distinct()
-    sizes = buckets.groupBy("bkey").agg(F.count(F.lit(1)).alias("n"))
-    buckets = buckets.join(
-        F.broadcast(sizes.filter(F.col("n") <= max_bucket).drop("n")), "bkey"
-    )
-    a = buckets.select("bkey", F.col("id").alias("a"))
-    b = buckets.select("bkey", F.col("id").alias("b"))
-    return (
-        a.join(b, "bkey")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    return block_pairs(capped_blocks(buckets, MAX_BUCKET))
 
 
 def ngram_jaccard_verify(
@@ -129,7 +123,6 @@ def ngram_jaccard_verify(
     candidates: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard on candidate pairs (pandas UDF) ->
@@ -142,8 +135,8 @@ def ngram_jaccard_verify(
         def sh(t):
             toks = (t or "").split(" ")
             return {
-                " ".join(toks[i : i + shingle_n])
-                for i in range(max(len(toks) - shingle_n + 1, 1))
+                " ".join(toks[i : i + SHINGLE_N])
+                for i in range(max(len(toks) - SHINGLE_N + 1, 1))
             }
 
         out = []
@@ -177,7 +170,6 @@ def cross_split_leakage(
     threshold: float = 0.8,
     num_hashes: int = 16,
     bands: int = 4,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Eval-hygiene check: near-duplicate pairs CROSSING split
     boundaries (a test document that near-duplicates a train document
@@ -186,9 +178,7 @@ def cross_split_leakage(
     candidates (exact duplicates collide trivially) -> exact n-gram
     Jaccard verify -> keep pairs whose splits differ. Returns
     (a, b, split_a, split_b, jaccard)."""
-    cands = minhash_lsh_candidates(
-        docs, text_col, id_col, num_hashes, bands, max_bucket
-    )
+    cands = minhash_lsh_candidates(docs, text_col, id_col, num_hashes, bands)
     verified = ngram_jaccard_verify(
         docs, cands, text_col, id_col, threshold=threshold
     )
@@ -214,8 +204,6 @@ def dedup_corpus(
     threshold: float = 0.9,
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> tuple[DataFrame, DataFrame]:
     """End-to-end near-duplicate removal — the user-facing composition
     of the candidates-then-verify-then-cluster chain:
@@ -238,26 +226,22 @@ def dedup_corpus(
 
     Exact dedup runs FIRST and LSH runs over distinct texts only: a
     mega-group of byte-identical documents (boilerplate repeated 10^6
-    times) saturates its LSH buckets, and the ``max_bucket`` skew cap
+    times) saturates its LSH buckets, and the :data:`MAX_BUCKET` skew cap
     would then DROP those buckets — the dups would silently survive.
     The hash groupBy has no such cap (Spark aggregates arbitrary group
     sizes), so exact multiplicity is always fully collapsed, and the
     near-dup stage sees each text once.
 
-    Scale: candidate generation is bucketed with a ``max_bucket`` skew
-    cap; verification touches candidates only; CC is the O(log n)
+    Scale: candidate generation is bucketed with a :data:`MAX_BUCKET`
+    skew cap; verification touches candidates only; CC is the O(log n)
     min-label/pointer-jumping loop (one shuffle per round). Edges are
     a tiny fraction of the corpus, so the CC rounds are cheap relative
     to the signature scan.
     """
-    from .cc import connected_components
-
     uniques, emap = exact_dedup(docs, text_col, id_col)
-    cands = minhash_lsh_candidates(
-        uniques, text_col, id_col, num_hashes, bands, max_bucket
-    )
+    cands = minhash_lsh_candidates(uniques, text_col, id_col, num_hashes, bands)
     edges = ngram_jaccard_verify(
-        uniques, cands, text_col, id_col, shingle_n, threshold
+        uniques, cands, text_col, id_col, threshold
     ).select("a", "b")
     labels = connected_components(edges, src="a", dst="b")
     # final keeper per exact-unique doc: its near-dup component root,
@@ -298,7 +282,7 @@ def dedup_corpus(
     return deduped, clusters
 
 
-def simhash_expr(text_col: str = "text", bits: int = 32):
+def simhash_expr(text_col: str = "text"):
     """32-bit SimHash column: per-token MD5 hex-digit parity majority
     vote — identical formulation to queries.q_simhash (oracled).
 
@@ -314,9 +298,9 @@ def simhash_expr(text_col: str = "text", bits: int = 32):
         "b -> CASE WHEN substr(h, b + 1, 1) IN "
         "('1','3','5','7','9','b','d','f') THEN 1 ELSE -1 END), "
         "(x, y) -> x + y))"
-    ).format(t=text_col, bits=bits, m=bits - 1)
+    ).format(t=text_col, bits=SIMHASH_BITS, m=SIMHASH_BITS - 1)
     combine = (
-        f"aggregate(zip_with({weight}, sequence(0, {bits - 1}), "
+        f"aggregate(zip_with({weight}, sequence(0, {SIMHASH_BITS - 1}), "
         "(w, b) -> CASE WHEN w > 0 THEN shiftleft(1L, b) ELSE 0L END), "
         "0L, (acc, x) -> acc + x)"
     )
@@ -327,12 +311,10 @@ def simhash_dedup(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    band_bits: int = 8,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """SimHash + banded bucketing: docs sharing any 8-bit band of their
     simhash become candidate pairs (hamming-ball style blocking).
-    Buckets above ``max_bucket`` are dropped (skew guard — without it a
+    Buckets above :data:`MAX_BUCKET` are dropped (skew guard — without it a
     mega-group of near-identical docs makes the self-join quadratic;
     collapse exact duplicates with :func:`exact_dedup` first)."""
     sh = docs.select(
@@ -345,50 +327,35 @@ def simhash_dedup(
     # (id, simhash) projection once per run — 16 bytes/doc, never the
     # text (round 6, guide §5; same pattern as path_closure's loop).
     sh = sh.localCheckpoint(eager=False)
-    bands = 32 // band_bits
     keys = F.array(
         *[
             F.concat_ws(
                 "|",
                 F.lit(str(b)),
-                F.shiftright(F.col("simhash"), b * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
+                F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
+                .bitwiseAND(F.lit((1 << SIMHASH_BAND_BITS) - 1))
                 .cast("string"),
             )
-            for b in range(bands)
+            for b in range(SIMHASH_BITS // SIMHASH_BAND_BITS)
         ]
     )
     buckets = sh.select("id", "simhash", F.explode(keys).alias("bkey"))
-    sizes = buckets.groupBy("bkey").agg(F.count(F.lit(1)).alias("n"))
-    buckets = buckets.join(
-        F.broadcast(sizes.filter(F.col("n") <= max_bucket).drop("n")), "bkey"
-    )
-    a = buckets.select("bkey", F.col("id").alias("a"), F.col("simhash").alias("sa"))
-    b = buckets.select("bkey", F.col("id").alias("b"), F.col("simhash").alias("sb"))
-    pairs = (
-        a.join(b, "bkey")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "sa", "sb")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return pairs.withColumn("hamming", hamming).drop("sa", "sb")
+    pairs = block_pairs(capped_blocks(buckets, MAX_BUCKET))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return pairs.select("a", "b", hamming.alias("hamming"))
 
 
 def embedding_neardup(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    planes: int = 8,
     threshold: float = 0.95,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Cosine near-dup via random-hyperplane LSH: sign signature from
     deterministic pseudo-random planes (md5-seeded), bucket self-join,
-    exact cosine verify — all JVM-side. Buckets above ``max_bucket``
+    exact cosine verify — all JVM-side. Buckets above :data:`MAX_BUCKET`
     are dropped (skew guard against quadratic self-joins on repeated
     vectors; collapse exact duplicates upstream first)."""
-    dim_expr = F.size(F.col(vec_col))
     # plane p component j = (md5 digit) - 7.5 : deterministic pseudo-noise
     sign_bits = F.array(
         *[
@@ -398,7 +365,7 @@ def embedding_neardup(
                 "AS DOUBLE) - 32767.5)), 0D, (a, x) -> a + x) > 0 "
                 "THEN '1' ELSE '0' END".format(v=vec_col, p=p)
             )
-            for p in range(planes)
+            for p in range(EMBEDDING_PLANES)
         ]
     )
     sig = emb.select(
@@ -410,14 +377,8 @@ def embedding_neardup(
     # re-run the 8 plane dot-products per vector — compute them once
     # (round 6, guide §5)
     sig = sig.localCheckpoint(eager=False)
-    sizes = sig.groupBy("bkey").agg(F.count(F.lit(1)).alias("n"))
-    sig = sig.join(
-        F.broadcast(sizes.filter(F.col("n") <= max_bucket).drop("n")), "bkey"
-    )
-    a = sig.select("bkey", F.col("id").alias("a"), F.col("v").alias("va"))
-    b = sig.select("bkey", F.col("id").alias("b"), F.col("v").alias("vb"))
     dot = (
-        "aggregate(zip_with(va, vb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "aggregate(zip_with(v_a, v_b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "0D, (a, x) -> a + x)"
     )
     nrm = (
@@ -425,13 +386,11 @@ def embedding_neardup(
         "0D, (a, x) -> a + x))"
     )
     return (
-        a.join(b, "bkey")
-        .filter(F.col("a") < F.col("b"))
+        block_pairs(capped_blocks(sig, MAX_BUCKET))
         .withColumn(
             "cosine",
-            F.expr(f"({dot}) / ({nrm.format('va')} * {nrm.format('vb')})"),
+            F.expr(f"({dot}) / ({nrm.format('v_a')} * {nrm.format('v_b')})"),
         )
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", F.round("cosine", 6).alias("cosine"))
-        .distinct()
     )

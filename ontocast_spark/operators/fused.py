@@ -36,10 +36,8 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernels.chunker import MAX_CHUNK_SIZE, MIN_CHUNK_SIZE
 from ..kernels.construct import construct_batches
 from ..ontology import OntologyIndex
-from .assemble import TURN_SEPARATOR
 from .canonicalize import CANON_COMBINED_SCHEMA
 
 
@@ -50,9 +48,6 @@ def kg_construct_fused_turns(
     domain: str = "https://example.com",
     max_turns: int | None = None,
     max_chunks: int | None = None,
-    min_chunk_size: int = MIN_CHUNK_SIZE,
-    max_chunk_size: int = MAX_CHUNK_SIZE,
-    separator: str = TURN_SEPARATOR,
 ) -> DataFrame:
     """conversations(conv_id, turn_idx, text, ...) -> combined canon
     rows, with document assembly fused into the kernel pass.
@@ -82,7 +77,6 @@ def kg_construct_fused_turns(
 
     task = functools.partial(
         construct_batches, index=bc_index, doc_prefix=doc_prefix,
-        separator=separator, max_chunks=max_chunks,
-        min_chunk_size=min_chunk_size, max_chunk_size=max_chunk_size,
+        max_chunks=max_chunks,
     )
     return conv.mapInArrow(task, schema=CANON_COMBINED_SCHEMA)

@@ -709,7 +709,7 @@ def q_crossdoc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         fa, kg_namespace="https://kg/canon/",
         max_block_size=1_000_000_000, exact_only=True,
     )
-    meta_a = canonical_entity_meta(rew_a, map_a)
+    meta_a = canonical_entity_meta(rew_a)
     _, full = incremental_canonicalize(
         fb, map_a, meta_a, kg_namespace="https://kg/canon/",
         max_block_size=1_000_000_000, exact_only=True,
@@ -3209,7 +3209,7 @@ bkeys AS (
   UNION ALL
   SELECT doc_id, '1|' || sig2 || '|' || sig3 AS bkey, sh FROM sigs
 ),
--- mirror the operator's max_bucket=512 LSH skew cap (same pattern as
+-- mirror the operator's MAX_BUCKET = 512 LSH skew cap (same pattern as
 -- ORACLE_SIMHASH_PAIRS) so parity holds when a band bucket saturates
 kept AS (SELECT bkey FROM bkeys GROUP BY bkey HAVING count(*) <= 512),
 edges AS (

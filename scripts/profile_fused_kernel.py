@@ -16,8 +16,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ontocast_spark.synth import gen_conversation
 from ontocast_spark.ontology import builtin_ontology_index
-from ontocast_spark.kernels.chunker import MAX_CHUNK_SIZE, MIN_CHUNK_SIZE
-from ontocast_spark.kernels.construct import COMBINED_COLUMNS, construct_document
+from ontocast_spark.kernels.construct import (
+    COMBINED_COLUMNS, TURN_SEPARATOR, construct_document,
+)
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
 
@@ -27,14 +28,13 @@ idx = builtin_ontology_index()
 docs = []
 for i in range(N):
     rows = gen_conversation(i, seed=42)
-    text = "\n\n".join(r[3] for r in sorted(rows, key=lambda r: r[1]))
+    text = TURN_SEPARATOR.join(r[3] for r in sorted(rows, key=lambda r: r[1]))
     docs.append((f"conv{i:08d}", f"https://example.com/doc/x{i}", text))
 
 def run():
     out = {k: [] for k in COMBINED_COLUMNS}
     for conv_id, doc_iri, text in docs:
-        construct_document(conv_id, doc_iri, text, idx, out, None,
-                           MIN_CHUNK_SIZE, MAX_CHUNK_SIZE)
+        construct_document(conv_id, doc_iri, text, idx, out, None)
     return out["row_kind"].count("triple")
 
 t0 = time.perf_counter()

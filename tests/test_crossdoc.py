@@ -36,6 +36,56 @@ def test_connected_components_chain(spark):
     assert comps[0]["comp"] == "n00"
 
 
+def test_connected_components_evaluates_edges_once(spark):
+    """The caller's edge plan runs once per call, not once per round: a
+    counting Python UDF in the edge plan is evaluated at most twice per
+    edge row (once for each direction of the symmetric edge set)."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        calls.add(1)
+        return x
+
+    n = 40
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)], ["src", "dst"]
+    ).select(F.udf(counted, "string")("src").alias("src"), "dst")
+    labels = connected_components(edges)
+    assert {r["comp"] for r in labels.collect()} == {"n00"}
+    assert calls.value <= 2 * n, calls.value
+
+
+def _meta_df(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "entity string, local_name string, label string, types array<string>",
+    )
+
+
+def test_crossdoc_block_cap(spark):
+    """A block of exactly ``max_block_size`` entities is paired, one more
+    entity drops it, and a pair sharing several block keys comes out
+    once."""
+    ns = "https://x.com/e/"
+    # one "tk:zebra" token block; every "ln:x<i>" block is a singleton
+    zebras = [(f"{ns}x{i}", f"x{i}", "zebra", []) for i in range(4)]
+    at_cap = candidate_pairs(_meta_df(spark, zebras[:3]), max_block_size=3)
+    assert sorted((r["a"], r["b"]) for r in at_cap.collect()) == [
+        (ns + "x0", ns + "x1"), (ns + "x0", ns + "x2"), (ns + "x1", ns + "x2"),
+    ]
+    over = candidate_pairs(_meta_df(spark, zebras), max_block_size=3)
+    assert over.count() == 0
+
+    # shares "ln:twin", "tk:alpha" and "tk:beta"
+    twins = _meta_df(spark, [
+        ("https://x.com/1/twin", "twin", "Alpha Beta", []),
+        ("https://x.com/2/twin", "twin", "Alpha Beta", []),
+    ])
+    assert [(r["a"], r["b"]) for r in candidate_pairs(twins).collect()] == [
+        ("https://x.com/1/twin", "https://x.com/2/twin")
+    ]
+
+
 def _facts_df(spark, rows):
     return spark.createDataFrame(rows, schema=TRIPLES)
 
@@ -311,7 +361,7 @@ def test_incremental_canonicalize_stability(spark):
     rewr_a, map_a = canonicalize_crossdoc(batch_a, kg_namespace="https://x.com/kg/")
     map_a_rows = {(r["original_iri"], r["canonical_iri"]) for r in map_a.collect()}
     assert {c for _, c in map_a_rows} == {"https://x.com/kg/john_doe"}
-    canon_meta = canonical_entity_meta(rewr_a, map_a)
+    canon_meta = canonical_entity_meta(rewr_a)
 
     batch_b = _facts_df(spark, [
         # adopts the existing canonical (same local name, no types)
@@ -491,7 +541,7 @@ def test_incremental_vs_batch_corpus_agreement(spark, reference_chain):
 
     _, map_all = canonicalize_crossdoc(facts)
     rew_a, map_a = canonicalize_crossdoc(fa)
-    meta_a = canonical_entity_meta(rew_a, map_a)
+    meta_a = canonical_entity_meta(rew_a)
     _, map_inc = incremental_canonicalize(fb, map_a, meta_a)
 
     def pairs(mapping):

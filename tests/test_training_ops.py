@@ -56,6 +56,26 @@ def test_minhash_lsh_and_jaccard(spark, docs):
         assert 0.5 <= v[(90001, 90003)] < 1.0
 
 
+def test_minhash_lsh_bucket_cap(spark):
+    """Identical texts share every band bucket: ``MAX_BUCKET`` copies
+    yield each pair once across the bands, one more copy drops every
+    bucket."""
+    from ontocast_spark.operators.dedup import MAX_BUCKET
+
+    def copies(n):
+        return spark.createDataFrame(
+            [(i, "the same words in every copy of this document") for i in range(n)],
+            "doc_id long, text string",
+        )
+
+    at_cap = minhash_lsh_candidates(copies(MAX_BUCKET), num_hashes=4, bands=2)
+    n_pairs = MAX_BUCKET * (MAX_BUCKET - 1) // 2
+    assert at_cap.filter(F.col("a") < F.col("b")).distinct().count() == n_pairs
+    assert at_cap.count() == n_pairs
+    over = minhash_lsh_candidates(copies(MAX_BUCKET + 1), num_hashes=4, bands=2)
+    assert over.count() == 0
+
+
 def test_dedup_corpus_transitive(spark):
     """A~B and B~C near-dups (A!~C direct is irrelevant) must collapse
     into ONE cluster with keeper = min id, and the deduped corpus keeps

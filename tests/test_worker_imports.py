@@ -39,7 +39,7 @@ def test_fused_task_imports_no_pandas():
     assert out.stdout.strip().splitlines()[-1] == "False", out.stdout
 
 
-# argv: a pickle of (index, separator, turns). The index stays a pickle
+# argv: a pickle of (index, turns). The index stays a pickle
 # until after the snapshot, as a broadcast reaches a worker; the turns
 # are an Arrow IPC stream, as the JVM sends them (building the batch
 # from Python lists here would load pyarrow's pandas shim before the
@@ -53,7 +53,7 @@ from ontocast_spark.kernels import aggregate, chunker
 from ontocast_spark.kernels.construct import construct_batches
 
 with open(sys.argv[1], "rb") as fh:
-    index_blob, separator, turns = pickle.load(fh)
+    index_blob, turns = pickle.load(fh)
 batch = pyarrow.ipc.open_stream(turns).read_next_batch()
 calls = {"split_text": 0, "native_group": 0}
 
@@ -71,8 +71,7 @@ before = set(sys.modules)
 index = types.SimpleNamespace(value=pickle.loads(index_blob))
 out = list(construct_batches(
     iter([batch]), index=index, doc_prefix="https://example.com/doc/",
-    separator=separator, max_chunks=None, min_chunk_size=chunker.MIN_CHUNK_SIZE,
-    max_chunk_size=chunker.MAX_CHUNK_SIZE))
+    max_chunks=None))
 print(json.dumps({
     "new_modules": sorted(set(sys.modules) - before),
     "calls": calls,
@@ -102,8 +101,7 @@ def test_daemon_preload_covers_fused_task(tmp_path):
         writer.write_batch(batch)
     blob = tmp_path / "task.pickle"
     blob.write_bytes(pickle.dumps((
-        pickle.dumps(builtin_ontology_index()), TURN_SEPARATOR,
-        sink.getvalue().to_pybytes(),
+        pickle.dumps(builtin_ontology_index()), sink.getvalue().to_pybytes(),
     )))
 
     out = subprocess.run(
