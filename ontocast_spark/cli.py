@@ -255,12 +255,8 @@ def main(argv=None) -> None:
             warehouse=args.warehouse, run_id=args.run_id,
         )
     else:
-        if "/" in args.input or args.input.endswith(".parquet"):
-            conversations = spark.read.parquet(args.input)
-        else:
-            conversations = spark.read.table(args.input)
         out = run_pipeline(
-            spark, conversations, index=index, config=cfg,
+            spark, _read_parquet_or_table(spark, args.input), index=index, config=cfg,
             warehouse=args.warehouse, run_id=args.run_id,
         )
     n = out["kg_triples"].count()

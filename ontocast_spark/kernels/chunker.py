@@ -49,22 +49,18 @@ _BUCKET_CACHE: dict[str, int] = {}
 _BUCKET_CACHE_MAX = 1 << 16
 
 
-def hash_embed(text: str, dim: int = EMBED_DIM) -> np.ndarray:
+def hash_embed(text: str) -> np.ndarray:
     """Deterministic bag-of-hashed-tokens embedding (crc32 buckets)."""
-    vec = np.zeros(dim, dtype=np.float64)
-    if dim == EMBED_DIM:
-        cache = _BUCKET_CACHE
-        get = cache.get
-        for tok in _TOKEN_RE.findall(text.lower()):
-            b = get(tok)
-            if b is None:
-                b = zlib.crc32(tok.encode()) % dim
-                if len(cache) < _BUCKET_CACHE_MAX:
-                    cache[tok] = b
-            vec[b] += 1.0
-    else:
-        for tok in _TOKEN_RE.findall(text.lower()):
-            vec[zlib.crc32(tok.encode()) % dim] += 1.0
+    vec = np.zeros(EMBED_DIM, dtype=np.float64)
+    cache = _BUCKET_CACHE
+    get = cache.get
+    for tok in _TOKEN_RE.findall(text.lower()):
+        b = get(tok)
+        if b is None:
+            b = zlib.crc32(tok.encode()) % EMBED_DIM
+            if len(cache) < _BUCKET_CACHE_MAX:
+                cache[tok] = b
+        vec[b] += 1.0
     if not vec.any():
         vec[:] = 1.0
     return vec
@@ -159,19 +155,14 @@ def _cosine_distances(embeddings: np.ndarray) -> np.ndarray:
     return 1.0 - num / den
 
 
-def split_text(
-    text: str,
-    min_chunk_size: int | None = MIN_CHUNK_SIZE,
-    percentile: float = BREAKPOINT_PERCENTILE,
-    buffer_size: int = BUFFER_SIZE,
-) -> list[str]:
+def split_text(text: str) -> list[str]:
     """One semantic-split pass (chunk/util.py:133-196)."""
-    sentences = [s.strip() for s in SENTENCE_SPLIT_RE.split(text) if s is not None]
+    sentences = [s.strip() for s in SENTENCE_SPLIT_RE.split(text)]
     sentences = [s for s in sentences if s]
     if len(sentences) <= 1:
         return sentences
-    distances = _cosine_distances(_hash_embed_windows(sentences, buffer_size))
-    threshold = np.percentile(distances, percentile)
+    distances = _cosine_distances(_hash_embed_windows(sentences, BUFFER_SIZE))
+    threshold = np.percentile(distances, BREAKPOINT_PERCENTILE)
     indices_above = [i for i, d in enumerate(distances) if d > threshold]
 
     chunks: list[str] = []
@@ -182,7 +173,7 @@ def split_text(
         # min-size merge: a too-small slice is NOT emitted and
         # start_index is NOT advanced, so it merges into the next slice
         # (chunk/util.py:181-186, ported bug-for-bug)
-        if min_chunk_size is not None and len(combined_text) < min_chunk_size:
+        if len(combined_text) < MIN_CHUNK_SIZE:
             continue
         chunks.append(combined_text)
         start_index = index + 1
@@ -191,11 +182,7 @@ def split_text(
     return chunks
 
 
-def chunk_document(
-    text: str,
-    min_chunk_size: int = MIN_CHUNK_SIZE,
-    max_chunk_size: int = MAX_CHUNK_SIZE,
-) -> list[str]:
+def chunk_document(text: str) -> list[str]:
     """Full chunking: split + bounded recursive re-chunk of oversized
     pieces with trailing-minichunk merge (chunker.py:51-71). An
     empty/whitespace document yields no chunks (the reference routes
@@ -204,13 +191,13 @@ def chunk_document(
         return []
     docs = [text]
     while True:
-        if all(len(d) < max_chunk_size for d in docs):
+        if all(len(d) < MAX_CHUNK_SIZE for d in docs):
             return docs
         new_docs: list[str] = []
         for d in docs:
-            if len(d) > max_chunk_size:
-                cdocs = split_text(d, min_chunk_size=min_chunk_size)
-                if len(cdocs) > 1 and len(cdocs[-1]) < min_chunk_size:
+            if len(d) > MAX_CHUNK_SIZE:
+                cdocs = split_text(d)
+                if len(cdocs) > 1 and len(cdocs[-1]) < MIN_CHUNK_SIZE:
                     cdocs = cdocs[:-2] + [cdocs[-2] + cdocs[-1]]
                 new_docs.extend(cdocs)
             else:

@@ -48,6 +48,10 @@ def _tokens(text: str) -> set[str]:
     return set(_TOKEN_RE.findall(text.lower()))
 
 
+# select_ontology: fewest shared tokens for a chunk to pick an ontology
+MIN_ONTOLOGY_OVERLAP = 2
+
+
 @dataclass
 class OntologyIndex:
     """Flattened, phrase-indexed view over one or more ontologies."""
@@ -73,11 +77,12 @@ class OntologyIndex:
             self.prop_by_phrase, key=len, reverse=True
         )
 
-    def select_ontology(self, excerpt: str, min_overlap: int = 2) -> str | None:
+    def select_ontology(self, excerpt: str) -> str | None:
         """Entity-link scoring replacement of the reference's LLM
         ontology selection (/root/reference/ontocast/agent/
         select_ontology.py:26-82): token-overlap argmax over the first
-        1000 chars, null fallback below ``min_overlap``.
+        1000 chars, null fallback below ``MIN_ONTOLOGY_OVERLAP`` shared
+        tokens.
 
         Ties break on ontology_id sort order for determinism.
         """
@@ -87,7 +92,7 @@ class OntologyIndex:
             score = len(toks & self._onto_tokens[oid])
             if score > best_score:
                 best_id, best_score = oid, score
-        return best_id if best_score >= min_overlap else None
+        return best_id if best_score >= MIN_ONTOLOGY_OVERLAP else None
 
     def rows(self) -> list[tuple]:
         """Term table rows for a DataFrame

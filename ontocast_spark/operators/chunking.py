@@ -20,17 +20,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernels.chunker import MAX_CHUNK_SIZE, MIN_CHUNK_SIZE, chunk_document
+from ..kernels.chunker import chunk_document
 from ..kernels.rdfterms import chunk_iri_for, render_text_hash
 from ..schemas import CHUNKS
 
 
-def chunk_documents(
-    documents: DataFrame,
-    max_chunks: int | None = None,
-    min_chunk_size: int = MIN_CHUNK_SIZE,
-    max_chunk_size: int = MAX_CHUNK_SIZE,
-) -> DataFrame:
+def chunk_documents(documents: DataFrame, max_chunks: int | None = None) -> DataFrame:
     """documents(conv_id, doc_iri, text) -> chunks table."""
 
     def chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -40,11 +35,7 @@ def chunk_documents(
             for conv_id, doc_iri, text in zip(
                 pdf["conv_id"], pdf["doc_iri"], pdf["text"]
             ):
-                chunks = chunk_document(
-                    text or "",
-                    min_chunk_size=min_chunk_size,
-                    max_chunk_size=max_chunk_size,
-                )
+                chunks = chunk_document(text or "")
                 if max_chunks is not None:
                     chunks = chunks[:max_chunks]
                 for idx, chunk_text in enumerate(chunks):

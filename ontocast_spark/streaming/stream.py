@@ -5,49 +5,47 @@ SURVEY.md §2.7); this module is the additional streaming surface a
 transcript pipeline needs: conversations arrive as turn events, and the
 KG store is maintained incrementally.
 
-Design: ``readStream`` -> watermark on ``ts`` -> session-style
-completion gate (a conversation is processed once its turns have been
-quiet for ``quiet_for_seconds`` of event time) -> ``foreachBatch``
-running the SAME batch pipeline (``run_pipeline`` with a warehouse) per
-micro-batch. The batch path's kg_canon resume key makes the sink
-idempotent: a conversation re-delivered in a later micro-batch is
-anti-joined away, so at-least-once delivery upstream still yields
-exactly-once KG rows.
+Design: ``readStream`` -> watermark on ``ts`` -> [session gate] ->
+``foreachBatch`` running the SAME batch pipeline (``run_pipeline`` with
+a warehouse) on each micro-batch of turns. Documents are assembled only
+inside that pipeline's fused kernel, so a streamed conversation yields
+exactly the rows a batch run over the same turns yields.
 
-Completeness gate: incoming turns are staged in a pending-turns buffer
-(generation-numbered parquet under the warehouse; Iceberg MERGE in
-production) and a conversation is fed to ``run_pipeline`` only once
-``max(ts)`` over its buffered turns trails the observed stream time by
-``quiet_for_seconds`` — so a conversation whose turns span micro-batches
-is assembled from ALL its turns, not frozen at the first batch. Turns
-arriving after a conversation was gated out (later than
-``quiet_for_seconds`` behind) are dropped by the resume key — the same
-contract as a watermark discarding late data. ``quiet_for_seconds=0``
-is process-at-sight mode for sources that deliver whole conversations.
+Completeness gate (``quiet_for_seconds > 0``): turns are deduplicated
+(:func:`stream_dedup_turns`) and held per ``conv_id`` in Spark's state
+store (:func:`session_gate`, ``applyInPandasWithState`` with an
+event-time timeout). A conversation's turns are released together once
+the **watermark** passes its newest ``ts`` + ``quiet_for_seconds``, so a
+conversation whose turns span micro-batches is built from all of them;
+release therefore also waits out the source's watermark delay. Turns
+behind the watermark are dropped by Spark. A straggler still inside the
+watermark but after its conversation's release opens a new session; the
+kg_canon resume key anti-joins that second release away.
+``quiet_for_seconds=0`` is process-at-sight mode for sources that
+deliver whole conversations: no gate, the same batch body.
 
-Crash safety: the buffer generation for batch N is written before the
-stream checkpoint commits batch N; on replay, turn-level
-``dropDuplicates`` and the kg_canon resume key make the rerun a no-op.
-
-``foreachBatch`` is the deliberate choice over a custom
-``applyInPandasWithState`` operator: the whole batch pipeline (chunker,
-extractor, canonicalizer) is reused unchanged, and state (which convs
-are done) lives in the warehouse, not the state store — surviving
-restarts with the stream checkpoint. The state-store-native session
-gate also exists — ``streaming.stateful.assemble_sessions_stateful``
-(``GroupState`` + event-time timeout, byte-identical document output) —
-for deployments that prefer the built-in state store over a buffer
-table.
+Crash safety: the gate's open sessions live in the state store, which
+is part of the stream checkpoint, so a query restarted from its
+checkpoint resumes them with the turns buffered before the stop. The
+batch pipeline's kg_canon resume key (a conversation present there is
+done and never recomputed) makes a replayed micro-batch, or a
+conversation re-delivered by an at-least-once source, a no-op: the KG
+rows stay exactly-once.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from typing import Any
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..ontology import OntologyIndex
 from ..pipeline import PipelineConfig, run_pipeline
+
+RELEASED_TURNS = "conv_id string, turn_idx int, text string"
+SESSION_STATE = "turn_idx array<int>, texts array<string>, max_ts_ms bigint"
 
 
 def stream_conversations_from_files(
@@ -66,39 +64,69 @@ def stream_conversations_from_files(
     )
 
 
-def split_ready(
-    pending: DataFrame, quiet_for_seconds: int
-) -> tuple[DataFrame, DataFrame]:
-    """Partition buffered turns into (ready, still_pending) by the
-    event-time session gate: a conversation is ready when its newest
-    turn trails the observed stream time (max ts over the buffer) by at
-    least ``quiet_for_seconds``.
+def session_gate(
+    turns: DataFrame, quiet_for_seconds: int, max_turns: int | None
+) -> DataFrame:
+    """Streaming turns(conv_id, turn_idx, text, ts, ...) — watermarked
+    on ``ts`` — to the released turns ``(conv_id, turn_idx, text)`` of
+    finished conversations.
 
-    Stream time is one scalar aggregate (driver-side, like the CC
-    convergence counts) — not a global window, which would funnel the
-    whole buffer through a single partition at scale; the per-
-    conversation max is a conv_id-partitioned window (one shuffle)."""
-    import datetime
+    A conversation's turns accumulate in ``GroupState``; when the
+    watermark passes ``max(ts) + quiet_for_seconds`` the event-time
+    timeout fires, all of its turns are emitted and the state is
+    cleared. ``max_turns`` (the pipeline's skew cap) is applied before
+    the state write, so an adversarial conversation cannot grow the
+    state store. The state shuffles by ``conv_id`` once per micro-batch;
+    there are no global windows."""
+    quiet_ms = quiet_for_seconds * 1000
 
-    stream_time = pending.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    if stream_time is None:
-        return pending.limit(0), pending
-    gate_ts = stream_time - datetime.timedelta(seconds=int(quiet_for_seconds))
-    w_max = F.max("ts").over(Window.partitionBy("conv_id"))
-    flagged = pending.withColumn("_ready", w_max <= F.lit(gate_ts))
+    def gate(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        (conv_id,) = key
+        if state.hasTimedOut:
+            idxs, texts, _ = state.get
+            state.remove()
+            yield pd.DataFrame(
+                {"conv_id": conv_id, "turn_idx": list(idxs), "text": list(texts)}
+            )
+            return
+        idxs: list[int] = []
+        texts: list[str | None] = []
+        max_ts_ms = 0
+        if state.exists:
+            old_idx, old_txt, max_ts_ms = state.get
+            idxs, texts = list(old_idx), list(old_txt)
+        for pdf in pdfs:
+            if max_turns is not None:
+                pdf = pdf[pdf["turn_idx"] < max_turns]
+            if len(pdf) == 0:
+                continue
+            idxs.extend(int(v) for v in pdf["turn_idx"])
+            texts.extend(pdf["text"])
+            batch_max = pdf["ts"].max()
+            if pd.notna(batch_max):
+                max_ts_ms = max(max_ts_ms, batch_max.value // 1_000_000)
+        if not idxs:
+            return
+        state.update((idxs, texts, max_ts_ms))
+        # clamp: when several file drops collapse into one micro-batch
+        # the watermark can already sit past max(ts) + quiet for an
+        # older session; Spark rejects a timeout at/behind the
+        # watermark, so fire at the earliest legal instant instead (the
+        # session is overdue either way: same turns, next trigger)
+        state.setTimeoutTimestamp(
+            max(max_ts_ms + quiet_ms, state.getCurrentWatermarkMs() + 1)
+        )
+
     return (
-        flagged.filter(F.col("_ready")).drop("_ready"),
-        flagged.filter(~F.col("_ready")).drop("_ready"),
-    )
-
-
-def _buffer_generations(warehouse: str) -> list[str]:
-    import glob
-    import os
-
-    return sorted(
-        glob.glob(os.path.join(warehouse, "turn_buffer_g*")),
-        key=lambda p: int(p.rsplit("g", 1)[1]),
+        turns.select("conv_id", "turn_idx", "text", "ts")
+        .groupBy("conv_id")
+        .applyInPandasWithState(
+            gate,
+            outputStructType=RELEASED_TURNS,
+            stateStructType=SESSION_STATE,
+            outputMode="append",
+            timeoutConf="EventTimeTimeout",
+        )
     )
 
 
@@ -113,51 +141,23 @@ def start_incremental_kg(
 ):
     """Start the incremental KG sink. Returns the StreamingQuery.
 
-    ``quiet_for_seconds > 0`` enables the buffered completeness gate
-    (see module docstring); 0 processes every conversation seen in the
-    batch immediately (whole-conversation sources)."""
-    import os
-    import shutil
+    ``quiet_for_seconds > 0`` feeds the pipeline through
+    :func:`stream_dedup_turns` and :func:`session_gate` (see module
+    docstring); 0 processes every conversation seen in the batch
+    immediately (whole-conversation sources)."""
+    cfg = config or PipelineConfig()
+    if quiet_for_seconds > 0:
+        stream = session_gate(
+            stream_dedup_turns(stream), quiet_for_seconds, cfg.max_turns
+        )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-
-        if quiet_for_seconds <= 0:
-            if batch_df.isEmpty():
-                return
-            run_pipeline(
-                spark, batch_df, index=index, config=config,
-                warehouse=warehouse, run_id=f"stream-batch-{batch_id}",
-            )
+        if batch_df.isEmpty():
             return
-
-        gens = _buffer_generations(warehouse)
-        pending = batch_df
-        if gens:
-            pending = spark.read.parquet(gens[-1]).unionByName(batch_df)
-        # replay-safe: at-least-once sources and buffer-generation
-        # replays collapse to one row per turn
-        pending = pending.dropDuplicates(["conv_id", "turn_idx"])
-        if pending.isEmpty():
-            return
-
-        ready, rest = split_ready(pending, quiet_for_seconds)
-
-        # stage the next buffer generation BEFORE running the pipeline:
-        # if the pipeline crashes mid-batch, the replay sees the same
-        # pending set (dedup above) and the resume key skips finished
-        # conversations
-        next_gen = os.path.join(warehouse, f"turn_buffer_g{batch_id}")
-        rest.write.mode("overwrite").parquet(next_gen)
-
-        if not ready.isEmpty():
-            run_pipeline(
-                spark, ready, index=index, config=config,
-                warehouse=warehouse, run_id=f"stream-batch-{batch_id}",
-            )
-        for old in _buffer_generations(warehouse):
-            if old != next_gen:
-                shutil.rmtree(old, ignore_errors=True)
+        run_pipeline(
+            batch_df.sparkSession, batch_df, index=index, config=cfg,
+            warehouse=warehouse, run_id=f"stream-batch-{batch_id}",
+        )
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -169,18 +169,17 @@ def start_incremental_kg(
 
 def stream_dedup_turns(
     stream: DataFrame,
-    keys: tuple[str, ...] = ("conv_id", "turn_idx"),
     watermark: str | None = "10 minutes",
 ) -> DataFrame:
     """State-store-native exact dedup of an at-least-once turn stream:
-    ``dropDuplicatesWithinWatermark`` keeps one row per key and — unlike
-    plain streaming ``dropDuplicates`` — EXPIRES each key's state once
-    the watermark passes its event time, so state is bounded by the
-    in-flight window instead of growing with the whole corpus (the only
-    viable form at 10^12 turns; a replayed source can re-emit a turn
-    minutes later and still collapse to one row). Complements the
-    batch-side ``dropDuplicates`` in ``start_incremental_kg``'s
-    foreachBatch, which guards buffer-generation replays.
+    ``dropDuplicatesWithinWatermark`` keeps one row per
+    ``(conv_id, turn_idx)`` and — unlike plain streaming
+    ``dropDuplicates`` — EXPIRES each key's state once the watermark
+    passes its event time, so state is bounded by the in-flight window
+    instead of growing with the whole corpus (the only viable form at
+    10^12 turns; a replayed source can re-emit a turn minutes later and
+    still collapse to one row). It runs ahead of :func:`session_gate`,
+    so a released conversation holds each turn once.
 
     An existing watermark on ``ts`` is detected through the PUBLIC
     column-metadata key ``spark.watermarkDelayMs`` (what
@@ -193,4 +192,4 @@ def stream_dedup_turns(
     has_wm = "spark.watermarkDelayMs" in (stream.schema["ts"].metadata or {})
     if watermark is not None and not has_wm:
         stream = stream.withWatermark("ts", watermark)
-    return stream.dropDuplicatesWithinWatermark(list(keys))
+    return stream.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])

@@ -6,14 +6,17 @@ import hashlib, json, os, sys
 import duckdb, pandas as pd, numpy as np
 from pyspark.sql import SparkSession
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sf_dir = "/root/testdata/sf0.01"
-spark = (SparkSession.builder.master("local[8]")
+# one task thread per usable CPU, the rule build_spark follows
+cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+spark = (SparkSession.builder.master(f"local[{cpus}]")
          .config("spark.sql.shuffle.partitions","8")
          .config("spark.driver.memory","8g")
          .config("spark.sql.session.timeZone","UTC")
          .appName("driveremu").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, REPO)
 from ontocast_spark.queries import ORACLES, QUERIES
 
 con = duckdb.connect()
@@ -66,7 +69,7 @@ print("BAD:", bad)
 # driver smoke of entry(): must run and return >= 0 rows with a stable schema
 import importlib.util
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py")
+    "__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 edf = mod.entry(spark)

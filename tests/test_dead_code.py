@@ -56,8 +56,6 @@ ALLOWLIST = {
     "serve": ("HTTP server entry point", _CONNECTORS),
     "start_incremental_kg": ("watermarked stream to incremental KG", _TRAINING_OPS),
     "stream_conversations_from_files": ("turn stream source", _TRAINING_OPS),
-    "stream_dedup_turns": ("streaming exact dedup", _TRAINING_OPS),
-    "assemble_sessions_stateful": ("state-store session gate", _TRAINING_OPS),
     "brute_force_topk": ("exact cosine top-k", _TRAINING_OPS),
     "ivf_topk": ("IVF-bucketed ANN", _TRAINING_OPS),
     "sample_deterministic": ("partition-invariant sampling", _TRAINING_OPS),

@@ -1,18 +1,53 @@
 """Structured Streaming front-end: file-source turn stream -> idempotent
-incremental KG via foreachBatch over the batch pipeline."""
+incremental KG via foreachBatch over the batch pipeline, with the
+state-store session gate releasing finished conversations' turns."""
 
+import datetime
 import os
-import time
+from collections import Counter, defaultdict
+
+import pytest
 
 from pyspark.sql import functions as F
 
 from ontocast_spark import io as kgio
+from ontocast_spark.pipeline import run_pipeline
 from ontocast_spark.schemas import CONVERSATIONS
 from ontocast_spark.streaming.stream import (
+    session_gate,
     start_incremental_kg,
     stream_conversations_from_files,
+    stream_dedup_turns,
 )
 from ontocast_spark.synth import gen_corpus
+
+T0 = datetime.datetime(2026, 1, 1, 10, 0, 0)
+
+
+def turn(conv, idx, text, minutes):
+    return (conv, idx, "user", text, None, T0 + datetime.timedelta(minutes=minutes))
+
+
+def _drop(spark, rows, in_dir):
+    spark.createDataFrame(rows, CONVERSATIONS).write.mode("append").parquet(in_dir)
+
+
+def _canon_convs(spark, warehouse):
+    if not kgio.stage_exists(spark, warehouse, "kg_canon"):
+        return set()
+    return {
+        r["conv_id"]
+        for r in kgio.read_stage(spark, warehouse, "kg_canon")
+        .select("conv_id").distinct().collect()
+    }
+
+
+def _canon_rows(spark, warehouse):
+    """kg_canon as conv_id -> multiset of rows."""
+    out = defaultdict(Counter)
+    for r in kgio.read_stage(spark, warehouse, "kg_canon").collect():
+        out[r["conv_id"]][r] += 1
+    return out
 
 
 def test_incremental_kg_stream(spark, tmp_path):
@@ -24,37 +59,17 @@ def test_incremental_kg_stream(spark, tmp_path):
     rows = gen_corpus(6, seed=13, mega_every=0)
     half1 = [r for r in rows if r[0] < "conv00000003"]
     half2 = [r for r in rows if r[0] >= "conv00000003"]
-    spark.createDataFrame(half1, CONVERSATIONS).write.mode("append").parquet(in_dir)
+    _drop(spark, half1, in_dir)
 
     stream = stream_conversations_from_files(spark, in_dir, CONVERSATIONS)
-    q = start_incremental_kg(stream, warehouse, ckpt, trigger_seconds=1)
+    q = start_incremental_kg(stream, warehouse, ckpt, trigger_seconds=0)
     try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if kgio.stage_exists(spark, warehouse, "kg_canon"):
-                done = {
-                    r["conv_id"]
-                    for r in kgio.read_stage(spark, warehouse, "kg_canon")
-                    .select("conv_id").distinct().collect()
-                }
-                if len(done) >= 3:
-                    break
-            time.sleep(2)
+        q.processAllAvailable()
+        assert len(_canon_convs(spark, warehouse)) == 3
         # second file arrives; plus a REPLAY of conv0 (at-least-once
         # delivery) — the kg_canon resume key must keep it exactly-once
-        spark.createDataFrame(
-            half2 + [r for r in rows if r[0] == "conv00000000"], CONVERSATIONS
-        ).write.mode("append").parquet(in_dir)
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            done = {
-                r["conv_id"]
-                for r in kgio.read_stage(spark, warehouse, "kg_canon")
-                .select("conv_id").distinct().collect()
-            }
-            if len(done) == 6:
-                break
-            time.sleep(2)
+        _drop(spark, half2 + [r for r in rows if r[0] == "conv00000000"], in_dir)
+        q.processAllAvailable()
     finally:
         q.stop()
 
@@ -70,59 +85,38 @@ def test_incremental_kg_stream(spark, tmp_path):
 def test_quiet_for_gate_assembles_split_conversations(spark, tmp_path):
     """A conversation whose turns span micro-batches must be assembled
     from ALL its turns (the completeness gate), not frozen at the first
-    batch (round-2 ADVICE, high)."""
-    import datetime
-
+    batch."""
     in_dir = str(tmp_path / "turns_gate")
     warehouse = str(tmp_path / "wh_gate")
     ckpt = str(tmp_path / "ckpt_gate")
     os.makedirs(in_dir)
 
-    t0 = datetime.datetime(2026, 1, 1, 10, 0, 0)
-
-    def turn(conv, idx, text, minutes):
-        return (conv, idx, "user", text,
-                None, t0 + datetime.timedelta(minutes=minutes))
-
-    # conv A splits across two drops; conv B advances stream time later
+    # conv A splits across two drops; conv B advances the watermark later
     drop1 = [turn("convA", 0, "Acme Corp employs Dana Fox.", 0)]
     drop2 = [
         turn("convA", 1, "Beta Inc employs Alice Reed.", 1),
         turn("convB", 0, "Gamma LLC employs Bob Stone.", 60),
     ]
-    spark.createDataFrame(drop1, CONVERSATIONS).write.mode("append").parquet(in_dir)
+    _drop(spark, drop1, in_dir)
 
     stream = stream_conversations_from_files(spark, in_dir, CONVERSATIONS)
     q = start_incremental_kg(
-        stream, warehouse, ckpt, trigger_seconds=1, quiet_for_seconds=600
+        stream, warehouse, ckpt, trigger_seconds=0, quiet_for_seconds=600
     )
     try:
-        # first batch: stream time = 10:00, gate = 09:50 -> nothing ready
-        deadline = time.time() + 60
-        while time.time() < deadline and not os.path.exists(
-            os.path.join(warehouse, "turn_buffer_g0")
-        ):
-            time.sleep(1)
+        # first batch: watermark 09:50, convA quiet until 10:10 -> held
+        q.processAllAvailable()
         assert not kgio.stage_exists(spark, warehouse, "kg_canon")
 
-        spark.createDataFrame(drop2, CONVERSATIONS).write.mode("append").parquet(in_dir)
-        # second batch: stream time = 11:00, gate = 10:50 -> convA ready
-        # (newest turn 10:01), convB still pending
-        deadline = time.time() + 120
-        done = set()
-        while time.time() < deadline:
-            if kgio.stage_exists(spark, warehouse, "kg_canon"):
-                done = {
-                    r["conv_id"]
-                    for r in kgio.read_stage(spark, warehouse, "kg_canon")
-                    .select("conv_id").distinct().collect()
-                }
-                if "convA" in done:
-                    break
-            time.sleep(2)
+        _drop(spark, drop2, in_dir)
+        # second batch moves the watermark to 10:50 (11:00 - 10 min):
+        # convA (newest turn 10:01, quiet until 10:11) is released,
+        # convB (quiet until 11:10) is still held
+        q.processAllAvailable()
     finally:
         q.stop()
 
+    done = _canon_convs(spark, warehouse)
     assert "convA" in done
     assert "convB" not in done  # still gated (quiet window not elapsed)
     canon = kgio.read_stage(spark, warehouse, "kg_canon")
@@ -132,70 +126,129 @@ def test_quiet_for_gate_assembles_split_conversations(spark, tmp_path):
 
 
 def test_stateful_session_assembly(spark, tmp_path):
-    """applyInPandasWithState session gate: turns spanning micro-batches
-    buffer in the state store; the event-time timeout (watermark past
-    max(ts)+gap) emits a document byte-identical to the batch
-    assemble_documents operator."""
-    import datetime
-
-    from ontocast_spark.operators.assemble import assemble_documents
-    from ontocast_spark.streaming.stateful import assemble_sessions_stateful
-
+    """The state-store session gate: turns spanning micro-batches buffer
+    in the state store; the event-time timeout (watermark past
+    max(ts) + quiet) releases every turn of the conversation at once,
+    with turns at or past ``max_turns`` cut before the state write."""
     in_dir = str(tmp_path / "turns_state")
     ckpt = str(tmp_path / "ckpt_state")
     os.makedirs(in_dir)
-
-    t0 = datetime.datetime(2026, 1, 1, 10, 0, 0)
-
-    def turn(conv, idx, text, minutes):
-        return (conv, idx, "user", text,
-                None, t0 + datetime.timedelta(minutes=minutes))
 
     a_turns = [
         turn("convA", 0, "Acme Corp employs Dana Fox.", 0),
         turn("convA", 1, "Beta Inc employs Alice Reed.", 1),
         turn("convA", 2, "Dana Fox manages Beta Inc.", 2),
     ]
+    capped = turn("convA", 3, "Past the turn cap.", 2)
     drops = [
-        a_turns[:2],                                   # A split across
-        [a_turns[2], turn("convB", 0, "Gamma LLC.", 30)],  # two batches
-        [turn("convC", 0, "Delta Co.", 60)],
+        a_turns[:2],                                           # A split across
+        [a_turns[2], capped, turn("convB", 0, "Gamma LLC.", 30)],  # two batches
         [turn("convD", 0, "Omega AG.", 120)],
     ]
-    spark.createDataFrame(drops[0], CONVERSATIONS).write.mode("append").parquet(in_dir)
+    _drop(spark, drops[0], in_dir)
 
     stream = stream_conversations_from_files(
         spark, in_dir, CONVERSATIONS, watermark="0 seconds"
     )
-    docs = assemble_sessions_stateful(stream, gap_seconds=60)
+    released = session_gate(stream, quiet_for_seconds=60, max_turns=3)
     q = (
-        docs.writeStream.format("memory").queryName("stateful_docs")
+        released.writeStream.format("memory").queryName("released_turns")
         .outputMode("append").option("checkpointLocation", ckpt).start()
     )
     try:
         q.processAllAvailable()
+        assert spark.sql("SELECT * FROM released_turns").count() == 0
         for d in drops[1:]:
-            spark.createDataFrame(d, CONVERSATIONS).write.mode("append").parquet(in_dir)
+            _drop(spark, d, in_dir)
             q.processAllAvailable()
         got = {
-            r["conv_id"]: r
-            for r in spark.sql("SELECT * FROM stateful_docs").collect()
+            (r["conv_id"], r["turn_idx"], r["text"])
+            for r in spark.sql("SELECT * FROM released_turns").collect()
         }
     finally:
         q.stop()
 
-    # A (quiet since 10:02) and B (10:30) fired; D's gap hasn't elapsed
-    assert "convA" in got and "convB" in got
-    assert "convD" not in got
-    a = got["convA"]
-    assert a["n_turns"] == 3  # state buffered across micro-batches
+    # A (quiet since 10:02) and B (10:30) fired; D's quiet window
+    # hasn't elapsed
+    assert {c for c, _, _ in got} == {"convA", "convB"}
+    assert {t for t in got if t[0] == "convA"} == {
+        (c, i, text) for c, i, _, text, _, _ in a_turns
+    }
 
-    batch = assemble_documents(
-        spark.createDataFrame(a_turns, CONVERSATIONS)
-    ).collect()[0]
-    assert a["text"] == batch["text"]
-    assert a["doc_hid"] == batch["doc_hid"]
-    assert a["doc_iri"] == batch["doc_iri"]
+
+@pytest.fixture(scope="module")
+def gated_restart(spark, tmp_path_factory):
+    """One gated stream stopped mid-session and restarted from its
+    checkpoint, with a replayed turn and a null-text turn, next to a
+    batch run_pipeline over the deduplicated turns. Returns
+    (released conv_ids, streamed kg_canon, batch kg_canon, held turns)."""
+    tmp = tmp_path_factory.mktemp("gated_restart")
+    in_dir, warehouse, ckpt = str(tmp / "turns"), str(tmp / "wh"), str(tmp / "ckpt")
+    os.makedirs(in_dir)
+
+    a_turns = [
+        turn("convA", 0, "Acme Corp employs Dana Fox.", 0),
+        turn("convA", 1, "Beta Inc employs Alice Reed.", 1),
+        turn("convA", 2, "Gamma LLC employs Bob Stone.", 2),
+    ]
+    r_turns = [
+        turn("convR", 0, "Delta Co employs Carl Ames.", 0),
+        turn("convR", 1, None, 1),
+        turn("convR", 2, "Omega AG employs Eve Lund.", 2),
+    ]
+    s_turns = [turn("convS", 0, "Sigma Ltd employs Finn Holt.", 0)]
+    held = [turn("convT", 0, "Tau GmbH.", 60)]
+
+    def run_until_idle():
+        stream = stream_conversations_from_files(spark, in_dir, CONVERSATIONS)
+        q = start_incremental_kg(
+            stream, warehouse, ckpt, trigger_seconds=0, quiet_for_seconds=60
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    _drop(spark, a_turns[:2] + r_turns[:2] + s_turns, in_dir)
+    run_until_idle()
+    assert not kgio.stage_exists(spark, warehouse, "kg_canon")
+    # after the restart: the sessions' last turns, a replay of convR's
+    # first turn, and convT moving the watermark to 10:50, past every
+    # other conversation's quiet window
+    _drop(spark, [a_turns[2], r_turns[0], r_turns[2]] + held, in_dir)
+    run_until_idle()
+
+    batch_wh = str(tmp / "wh_batch")
+    run_pipeline(
+        spark, spark.createDataFrame(a_turns + r_turns + s_turns, CONVERSATIONS),
+        warehouse=batch_wh,
+    )
+    return (
+        _canon_convs(spark, warehouse), _canon_rows(spark, warehouse),
+        _canon_rows(spark, batch_wh), held,
+    )
+
+
+def test_gate_restart_from_checkpoint(gated_restart):
+    """Stop the gated query mid-session and restart it from the same
+    checkpoint: the open session resumes from the state store, the
+    release holds the turns from both sides of the restart, and kg_canon
+    equals a batch run_pipeline over the same turns."""
+    released, streamed, batch, _ = gated_restart
+    assert released == {"convA", "convR", "convS"}  # convT still held
+    objs = {r["obj"] for r in streamed["convA"]}
+    assert "Dana Fox" in objs and "Bob Stone" in objs
+    assert streamed["convA"] == batch["convA"]
+
+
+def test_gate_replay_and_null_text_match_batch(gated_restart):
+    """A replayed turn collapses in the dedup ahead of the gate and a
+    null-text turn reaches the pipeline as null, so the streamed
+    kg_canon equals a batch run_pipeline over the deduplicated turns
+    (same documents, same doc_hid)."""
+    _, streamed, batch, _ = gated_restart
+    assert streamed["convR"] == batch["convR"]
+    assert streamed["convS"] == batch["convS"]
 
 
 def test_stream_dedup_turns(spark, tmp_path):
@@ -203,12 +256,6 @@ def test_stream_dedup_turns(spark, tmp_path):
     micro-batches while the duplicate is inside the watermark window
     (state-store dedup with watermark-bounded state)."""
     import datetime as dt
-
-    from ontocast_spark.schemas import CONVERSATIONS
-    from ontocast_spark.streaming.stream import (
-        stream_conversations_from_files,
-        stream_dedup_turns,
-    )
 
     src = str(tmp_path / "turns")
     out_dir = str(tmp_path / "out")
