@@ -1,16 +1,22 @@
-"""Table I/O + per-partition lineage checkpointing.
+"""Warehouse I/O: one stored KG table plus lineage checkpoints.
 
-Production target is Iceberg (``df.writeTo(table).append()``); this
-sandbox has no catalog, so the writer falls back to partitioned Parquet
-under a warehouse directory — both paths share this module, mirroring
-the reference's pluggable triple-store managers
-(/root/reference/ontocast/toolbox.py:98-117: Fuseki > Neo4j >
-filesystem).
+Production target is Iceberg (``df.writeTo(table).append()``); without
+a configured ``kg`` catalog the writer falls back to partitioned
+Parquet under a warehouse directory — both paths share this module,
+mirroring the reference's pluggable triple-store managers
+(ontocast/toolbox.py:98-117: Fuseki > Neo4j > filesystem).
 
-Resumability contract (north rule): every stage write also records a
-``checkpoints`` table row per task partition (stage, partition_id,
-row_count, conv_count, run_id) — the Spark analog of the reference's
-AgentState JSON checkpoint (/root/reference/ontocast/onto.py:112-136).
+The warehouse stores ``kg_canon`` (every row the pipeline emits, by
+``row_kind``) and ``checkpoints``, nothing else: ``kg_triples``,
+``entity_mappings`` and ``ontology_alignments`` are
+:func:`kg_projections` of ``kg_canon``, computed when read
+(:func:`read_stage` serves them under their names), so a run writes
+only the rows it adds and the store holds each fact once.
+
+Resumability contract (north rule): every stage write also appends one
+``checkpoints`` row (stage, partition_id = -1, row_count, conv_count,
+run_id) counted on the write pass itself — the Spark analog of the
+reference's AgentState JSON checkpoint (ontocast/onto.py:112-136).
 A killed job resumes by anti-joining the input's ``conv_id`` against
 the completed stage output (:func:`resume_filter`) — no recompute of
 finished conversations.
@@ -22,6 +28,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .schemas import split_lang_columns
+
+KG_PROJECTIONS = ("kg_triples", "entity_mappings", "ontology_alignments")
 
 
 def _use_iceberg(spark: SparkSession) -> bool:
@@ -36,14 +46,11 @@ def write_stage(
     partition_by: tuple[str, ...] = (),
     mode: str = "overwrite",
 ) -> str:
-    """Write a stage table + its checkpoint rows. Returns the path.
+    """Write a stage table + its checkpoint row. Returns the path.
 
-    Counters ride the write pass itself (``df.observe`` accumulators —
-    zero extra I/O) and the per-file lineage rows come from parquet
-    footer metadata, so the stage data is scanned exactly once. (Round-1
-    VERDICT "What's wrong" #3: the previous implementation re-read the
-    whole stage it had just written — 2x stage I/O at 100 TB.)
-    """
+    The counters ride the write pass itself (``df.observe``
+    accumulators — zero extra I/O), so the stage data is scanned
+    exactly once."""
     from pyspark.sql import Observation
 
     spark = df.sparkSession
@@ -57,14 +64,12 @@ def write_stage(
     df = df.observe(obs, *metrics)
 
     if _use_iceberg(spark):
-        from pyspark.sql import functions as F_  # local alias
-
         writer = df.writeTo(f"kg.{stage}")
         if mode == "overwrite":
             # bucket the store by conv_id so per-conversation reads and
             # the resume anti-join are partition-pruned at cluster scale
-            if "conv_id" in df.columns:
-                writer = writer.partitionedBy(F_.bucket(64, F_.col("conv_id")))
+            if has_conv:
+                writer = writer.partitionedBy(F.bucket(64, F.col("conv_id")))
             writer.createOrReplace()
         else:
             writer.append()
@@ -74,52 +79,60 @@ def write_stage(
             w = w.partitionBy(*partition_by)
         w.parquet(path)
 
-    # global counters observed on the write pass (no re-scan)
+    # global counters observed on the write pass (no re-scan); the
+    # store's own metadata (parquet footers, Iceberg manifests) already
+    # lists its files, so one summary row per write is the lineage
     got = obs.get
-    rows = [
-        (stage, -1, int(got["row_count"]),
-         int(got["conv_count"]) if has_conv else None, run_id)
-    ]
-    # per-file lineage from parquet footers (metadata-only reads); the
-    # Iceberg branch keeps its own manifest-level lineage, so the
-    # summary row alone is recorded there
-    if not _use_iceberg(spark):
-        rows.extend(
-            (stage, i, n, None, run_id)
-            for i, n in enumerate(_parquet_file_counts(path))
-        )
     ckpt = spark.createDataFrame(
-        rows,
+        [(stage, -1, int(got["row_count"]),
+          int(got["conv_count"]) if has_conv else None, run_id)],
         "stage string, partition_id int, row_count long, "
         "conv_count long, run_id string",
     )
-    ckpt_path = os.path.join(warehouse, "checkpoints")
-    ckpt.write.mode("append").parquet(ckpt_path)
+    ckpt.write.mode("append").parquet(os.path.join(warehouse, "checkpoints"))
     return path
 
 
-def _parquet_file_counts(path: str) -> list[int]:
-    """num_rows per data file, read from parquet footers only.
-
-    Skips hidden files and directories (``_temporary``, ``_SUCCESS``,
-    ``.*.crc``) exactly like Spark's file index: a run killed mid-write
-    leaves torn task attempts under ``_temporary/``, and the lineage
-    walk of a later resume run must not read them (found by
-    tests/test_resume.py::test_crash_resume_at_scale)."""
-    import pyarrow.parquet as pq
-
-    counts = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for name in sorted(files):
-            if name.endswith(".parquet") and not name.startswith(("_", ".")):
-                counts.append(
-                    pq.ParquetFile(os.path.join(root, name)).metadata.num_rows
-                )
-    return counts
+def kg_projections(canon: DataFrame) -> dict[str, DataFrame]:
+    """The public KG tables, each a projection of ``kg_canon`` rows:
+    ``kg_triples`` (``row_kind='triple'``), ``entity_mappings``
+    (``*_map``) and ``ontology_alignments``. Ontology-addendum rows
+    repeat per chunk, so they collapse to the distinct term-declaration
+    graph (the reference merges addenda into the managed ontology by
+    graph-union set semantics, ontocast/tool/ontology_manager.py:36-46).
+    Triples and alignments carry the explicit ``obj_lang`` column."""
+    kind = F.col("row_kind")
+    onto = canon.filter(kind == "ontology").select(
+        "subj", "pred", "obj", "obj_is_literal", "obj_datatype"
+    )
+    return {
+        "kg_triples": split_lang_columns(
+            canon.filter(kind == "triple").select(
+                "conv_id", "doc_iri", "subj", "pred", "obj",
+                "obj_is_literal", "obj_datatype",
+            )
+        ),
+        "entity_mappings": canon.filter(
+            kind.isin("entity_map", "predicate_map")
+        ).select(
+            "conv_id",
+            F.col("subj").alias("original_iri"),
+            F.col("obj").alias("canonical_iri"),
+            F.when(kind == "entity_map", F.lit("entity"))
+            .otherwise(F.lit("predicate"))
+            .alias("kind"),
+        ),
+        "ontology_alignments": split_lang_columns(
+            onto.dropDuplicates(["subj", "pred", "obj"])
+        ),
+    }
 
 
 def read_stage(spark: SparkSession, warehouse: str, stage: str) -> DataFrame:
+    """A stored table, or one of :func:`kg_projections` of the stored
+    ``kg_canon``."""
+    if stage in KG_PROJECTIONS:
+        return kg_projections(read_stage(spark, warehouse, "kg_canon"))[stage]
     if _use_iceberg(spark):
         return spark.read.table(f"kg.{stage}")
     return spark.read.parquet(os.path.join(warehouse, stage))

@@ -9,6 +9,7 @@ reference's per-document/per-chunk loops disappear)::
         (assemble, chunk, select, extract, sublimate, connect,
          canonicalize: operators/fused.kg_construct_fused_turns)
         ──▶ kg_canon{triple, entity_map, predicate_map, ontology}
+    projections of kg_canon (io.kg_projections), computed when read:
         triple ──▶ kg_triples;  *_map ──▶ entity_mappings
         ontology ──dedup──▶ ontology_alignments
 
@@ -21,10 +22,12 @@ The ontology-addendum dedup is a small distinct over ontology-namespace
 rows (term declarations repeat per chunk — high map-side combine
 ratio).
 
-``run_pipeline`` optionally persists every stage through
-:mod:`ontocast_spark.io` (parquet/Iceberg + per-partition lineage
-checkpoints) and resumes by anti-join when re-invoked with the same
-warehouse (north-rule resumability).
+``run_pipeline`` optionally persists ``kg_canon`` through
+:mod:`ontocast_spark.io` (parquet/Iceberg, one lineage checkpoint row
+per write) and resumes by anti-join when re-invoked with the same
+warehouse (north-rule resumability). ``kg_canon`` is the only stored KG
+table: a run appends the rows it adds and nothing else, and the three
+public tables are the same projections with or without a warehouse.
 """
 
 from __future__ import annotations
@@ -36,7 +39,6 @@ from pyspark.sql import functions as F
 
 from . import io as kgio
 from .ontology import OntologyIndex, builtin_ontology_index
-from .schemas import split_lang_columns
 from .operators.fused import kg_construct_fused_turns
 
 
@@ -47,17 +49,6 @@ class PipelineConfig:
     max_chunks: int | None = None  # reference AgentState.max_chunks analog
 
 
-def dedup_ontology_addendum(onto: DataFrame) -> DataFrame:
-    """Ontology-addendum rows repeat per chunk; collapse to the distinct
-    term-declaration graph (the reference merges addenda into the
-    managed ontology by graph-union set semantics,
-    /root/reference/ontocast/tool/ontology_manager.py:36-46)."""
-    return (
-        onto.select("subj", "pred", "obj", "obj_is_literal", "obj_datatype")
-        .dropDuplicates(["subj", "pred", "obj"])
-    )
-
-
 def run_pipeline(
     spark: SparkSession,
     conversations: DataFrame,
@@ -66,9 +57,11 @@ def run_pipeline(
     warehouse: str | None = None,
     run_id: str = "run0",
 ) -> dict[str, DataFrame]:
-    """Run the full pipeline; returns the stage DataFrames. When
-    ``warehouse`` is set, stages are persisted with lineage checkpoints
-    and already-completed conversations are skipped on re-run."""
+    """Run the full pipeline; returns :func:`io.kg_projections` of its
+    ``kg_canon`` rows. When ``warehouse`` is set, the new rows are
+    appended to the stored ``kg_canon`` (with a lineage checkpoint),
+    already-completed conversations are skipped, and the projections
+    cover the whole store."""
     index = index or builtin_ontology_index()
     cfg = config or PipelineConfig()
 
@@ -89,49 +82,14 @@ def run_pipeline(
             if kgio.stage_exists(spark, warehouse, "kg_canon")
             else "overwrite"
         )
-        # partition by row_kind: downstream row_kind filters become
-        # partition pruning instead of data scans
+        # partition by row_kind: each projection's row_kind filter is
+        # partition pruning instead of a data scan
         kgio.write_stage(
             combined, warehouse, "kg_canon", run_id, mode=mode,
             partition_by=("row_kind",),
         )
         combined = kgio.read_stage(spark, warehouse, "kg_canon")
-    ontology_rows = combined.filter(F.col("row_kind") == "ontology").drop(
-        "row_kind"
-    )
-
-    kg_triples = split_lang_columns(
-        combined.filter(F.col("row_kind") == "triple").select(
-            "conv_id", "doc_iri", "subj", "pred", "obj",
-            "obj_is_literal", "obj_datatype",
-        )
-    )
-    mappings = combined.filter(
-        F.col("row_kind").isin("entity_map", "predicate_map")
-    ).select(
-        "conv_id",
-        F.col("subj").alias("original_iri"),
-        F.col("obj").alias("canonical_iri"),
-        F.when(F.col("row_kind") == "entity_map", F.lit("entity"))
-        .otherwise(F.lit("predicate"))
-        .alias("kind"),
-    )
-    alignments = split_lang_columns(dedup_ontology_addendum(ontology_rows))
-
-    out = {
-        "kg_triples": kg_triples,
-        "entity_mappings": mappings,
-        "ontology_alignments": alignments,
-    }
-    if warehouse is not None:
-        # projections of the complete kg_canon store: cheap
-        # parquet-to-parquet rewrites, refreshed whole
-        kgio.write_stage(kg_triples, warehouse, "kg_triples", run_id, mode="overwrite")
-        kgio.write_stage(
-            alignments, warehouse, "ontology_alignments", run_id, mode="overwrite"
-        )
-        out["kg_triples"] = kgio.read_stage(spark, warehouse, "kg_triples")
-    return out
+    return kgio.kg_projections(combined)
 
 
 def run_pipeline_documents(

@@ -417,13 +417,6 @@ FROM documents
 
 _MINHASH_K = 4
 
-# shingles over a materialized __toks column (round 6): HOF lambdas get
-# no subexpression elimination, so slice(split(text), i, 3) inside the
-# transform re-ran the split once per shingle index — O(tokens²)/doc
-_SPARK_SHINGLES = (
-    "transform(sequence(1, greatest(size(__toks)-2, 1)), "
-    "i -> array_join(slice(__toks, i, 3), ' '))"
-)
 _DUCK_SHINGLES = (
     "[array_to_string(string_split(text, ' ')[i:i+2], ' ') "
     "for i in range(1, greatest(len(string_split(text, ' '))-2, 1)+1)]"
@@ -433,26 +426,16 @@ _DUCK_SHINGLES = (
 def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures over word 3-gram shingles (k=4 permutations
     via seeded MD5) — the candidate-generation half of MinHash-LSH
-    dedup."""
-    docs = _t(spark, sf_dir, "documents")
-    # single-projection shingles: one outer transform evaluates the
-    # shingle array once, aggregate/zip_with folds the per-shingle
-    # seeded hashes to the element-wise min (operators/dedup.py has the
-    # same shape); the intermediate alias is non-cheap and multiply
-    # referenced, so CollapseProject keeps it materialized per row
-    arr = (
-        f"aggregate("
-        f"transform({_SPARK_SHINGLES}, s -> transform(sequence(0, {_MINHASH_K - 1}), "
-        f"h -> md5(cast(h as string) || '|' || s))), "
-        f"array_repeat('zz', {_MINHASH_K}), "
-        f"(acc, x) -> zip_with(acc, x, (a, b) -> least(a, b)))"
+    dedup, computed by the production operator
+    ``operators.dedup.minhash_signature``."""
+    from .operators.dedup import minhash_signature
+
+    sig = minhash_signature(
+        _t(spark, sf_dir, "documents"), num_hashes=_MINHASH_K
     )
-    return (
-        docs.selectExpr("doc_id", "split(text, ' ') AS __toks")
-        .selectExpr("doc_id", f"{arr} AS _sigs")
-        .selectExpr(
-            "doc_id", *[f"_sigs[{k}] AS sig{k}" for k in range(_MINHASH_K)]
-        )
+    return sig.select(
+        F.col("id").alias("doc_id"),
+        *[F.col("sig")[k].alias(f"sig{k}") for k in range(_MINHASH_K)],
     )
 
 

@@ -103,18 +103,18 @@ def split_lang_columns(df):
     )
 
 
-def merge_lang_expr():
-    """Inverse of :func:`split_lang_columns` for serializers: folds
-    ``obj_lang`` back into the ``"@tag"`` dt-slot sentinel."""
+def merge_lang_columns(df):
+    """Exact inverse of :func:`split_lang_columns`, for serializers:
+    folds ``obj_lang`` back into the ``"@tag"`` dt-slot sentinel and
+    drops it. A frame without ``obj_lang`` is returned unchanged."""
+    if "obj_lang" not in df.columns:
+        return df
     from pyspark.sql import functions as F
 
-    from .kernels.rdfterms import RDF_LANGSTRING
-
-    return (
+    return df.withColumn(
+        "obj_datatype",
         F.when(
             F.col("obj_lang").isNotNull(),
             F.concat(F.lit("@"), F.col("obj_lang")),
-        )
-        .when(F.col("obj_datatype") == RDF_LANGSTRING, F.lit(None))
-        .otherwise(F.col("obj_datatype"))
-    )
+        ).otherwise(F.col("obj_datatype")),
+    ).drop("obj_lang")

@@ -60,7 +60,7 @@ def process_text(
     query, cli/serve.py:64-230 + fuseki.py)."""
     from .ontology import builtin_ontology_index
     from .pipeline import PipelineConfig, run_pipeline
-    from .schemas import merge_lang_expr
+    from .schemas import merge_lang_columns
     from .sources.turtle import serialize_turtle
 
     index = index or builtin_ontology_index()
@@ -74,12 +74,10 @@ def process_text(
     )
 
     def rows_to_tuples(df):
-        if "obj_lang" in df.columns:
-            df = df.withColumn("obj_datatype", merge_lang_expr()).drop("obj_lang")
         return [
             (r["subj"], r["pred"], r["obj"], bool(r["obj_is_literal"]),
              r["obj_datatype"])
-            for r in df.select(
+            for r in merge_lang_columns(df).select(
                 "subj", "pred", "obj", "obj_is_literal", "obj_datatype"
             ).collect()
         ]

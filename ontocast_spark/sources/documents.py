@@ -33,6 +33,7 @@ from ..kernels.rdfterms import (
     derive_ontology_id,
 )
 from ..ontology import OntologyIndex, OntologyTerm
+from ..schemas import merge_lang_columns
 from .turtle import parse_turtle, serialize_turtle
 
 OWL_CLASS_IRIS = {
@@ -141,14 +142,8 @@ def write_facts_turtle(
     os.makedirs(out_dir, exist_ok=True)
     px = prefixes or {}
 
-    if "obj_lang" in kg_triples.columns:
-        # fold the explicit lang column back into the dt-slot sentinel
-        # the Turtle serializer round-trips as '@tag'
-        from ..schemas import merge_lang_expr
-
-        kg_triples = kg_triples.withColumn(
-            "obj_datatype", merge_lang_expr()
-        ).drop("obj_lang")
+    # the Turtle serializer round-trips the dt-slot '@tag' sentinel
+    kg_triples = merge_lang_columns(kg_triples)
 
     def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
         conv_id = pdf["conv_id"].iloc[0]

@@ -30,6 +30,7 @@ import urllib.request
 from pyspark.sql import DataFrame
 
 from ..ontology import OntologyIndex
+from ..schemas import merge_lang_columns
 from .turtle import parse_turtle, serialize_turtle
 
 OWL_ONTOLOGY = "http://www.w3.org/2002/07/owl#Ontology"
@@ -130,12 +131,7 @@ def write_facts_fuseki(
     px = prefixes or {}
     cfg = (base_uri, dataset, auth)
 
-    if "obj_lang" in kg_triples.columns:
-        from ..schemas import merge_lang_expr
-
-        kg_triples = kg_triples.withColumn(
-            "obj_datatype", merge_lang_expr()
-        ).drop("obj_lang")
+    kg_triples = merge_lang_columns(kg_triples)
 
     def put_group(pdf: pd.DataFrame) -> pd.DataFrame:
         client = FusekiClient(*cfg)
@@ -170,13 +166,7 @@ def write_ontology_fuseki(
 ) -> bool:
     """Ontology sink (S9 analog of serialize_ontology): the deduped
     term-declaration graph is small — collect + one driver-side PUT."""
-    if "obj_lang" in alignments.columns:
-        from ..schemas import merge_lang_expr
-
-        alignments = alignments.withColumn(
-            "obj_datatype", merge_lang_expr()
-        ).drop("obj_lang")
-    rows = alignments.select(
+    rows = merge_lang_columns(alignments).select(
         "subj", "pred", "obj", "obj_is_literal", "obj_datatype"
     ).collect()
     triples = [

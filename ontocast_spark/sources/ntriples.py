@@ -8,7 +8,7 @@ pure column algebra (whole-stage codegen) and the write is a plain
 
 Language-tagged literals use the dt-slot ``"@tag"`` sentinel of the
 internal triple model (see sources/turtle.py); writers also accept an
-explicit ``obj_lang`` column (merged via schemas.merge_lang_expr).
+explicit ``obj_lang`` column (merged via schemas.merge_lang_columns).
 
 Unescaping is JVM-side (replace chain over the spec's simple escapes)
 for the common case; lines carrying ``\\uXXXX``/``\\UXXXXXXXX`` escapes
@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from ..schemas import merge_lang_columns
+
 
 def _escape_literal(col: Column) -> Column:
     # N-Triples literal escaping: backslash, quote, newline, CR, tab
@@ -38,12 +40,7 @@ def _escape_literal(col: Column) -> Column:
 def to_ntriples_lines(triples: DataFrame) -> DataFrame:
     """(subj, pred, obj, obj_is_literal, obj_datatype[, obj_lang]) ->
     one-column DataFrame of N-Triples lines."""
-    if "obj_lang" in triples.columns:
-        from ..schemas import merge_lang_expr
-
-        triples = triples.withColumn("obj_datatype", merge_lang_expr()).drop(
-            "obj_lang"
-        )
+    triples = merge_lang_columns(triples)
     dt = F.col("obj_datatype")
     annot = (
         F.when(dt.isNull(), F.lit(""))

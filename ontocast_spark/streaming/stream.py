@@ -9,7 +9,9 @@ Design: ``readStream`` -> watermark on ``ts`` -> [session gate] ->
 ``foreachBatch`` running the SAME batch pipeline (``run_pipeline`` with
 a warehouse) on each micro-batch of turns. Documents are assembled only
 inside that pipeline's fused kernel, so a streamed conversation yields
-exactly the rows a batch run over the same turns yields.
+exactly the rows a batch run over the same turns yields. Each
+micro-batch appends only its new rows to ``kg_canon``, the one stored
+KG table, so it costs what it adds, not a rewrite of the store.
 
 Completeness gate (``quiet_for_seconds > 0``): turns are deduplicated
 (:func:`stream_dedup_turns`) and held per ``conv_id`` in Spark's state
@@ -152,12 +154,18 @@ def start_incremental_kg(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        run_pipeline(
-            batch_df.sparkSession, batch_df, index=index, config=cfg,
-            warehouse=warehouse, run_id=f"stream-batch-{batch_id}",
-        )
+        # the emptiness check and the pipeline both read the batch: one
+        # persisted copy runs the gate and its state-store commit once
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            run_pipeline(
+                batch_df.sparkSession, batch_df, index=index, config=cfg,
+                warehouse=warehouse, run_id=f"stream-batch-{batch_id}",
+            )
+        finally:
+            batch_df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process_batch)

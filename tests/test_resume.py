@@ -46,22 +46,65 @@ def test_resume_no_recompute(spark, tmp_path):
     assert canon2.select(cols).exceptAll(canon_ref.select(cols)).count() == 0
     assert canon_ref.select(cols).exceptAll(canon2.select(cols)).count() == 0
 
-    # lineage checkpoints exist for every persisted stage
+    # lineage checkpoints exist for the one persisted stage
     ckpt = spark.read.parquet(os.path.join(warehouse, "checkpoints"))
     stages = {r["stage"] for r in ckpt.select("stage").distinct().collect()}
-    assert {"kg_canon", "kg_triples"} <= stages
+    assert stages == {"kg_canon"}
+
+
+def test_warehouse_stores_only_kg_canon(spark, tmp_path, monkeypatch):
+    """Three cumulative batches into one warehouse: each run writes one
+    stage, kg_canon, whose checkpoint counts that batch's rows only;
+    the warehouse holds kg_canon and checkpoints, and read_stage serves
+    kg_triples and ontology_alignments as projections equal to a
+    one-shot run without a warehouse."""
+    from collections import Counter
+
+    warehouse = os.path.join(str(tmp_path), "wh")
+    full = spark.createDataFrame(
+        gen_corpus(9, seed=7, mega_every=0), schema=CONVERSATIONS
+    )
+    written = []
+    write_stage = kgio.write_stage
+
+    def recording_write_stage(df, wh, stage, run_id, *args, **kwargs):
+        written.append((run_id, stage))
+        return write_stage(df, wh, stage, run_id, *args, **kwargs)
+
+    monkeypatch.setattr(kgio, "write_stage", recording_write_stage)
+    cuts = ["conv00000003", "conv00000006", "conv00000009"]
+    for i, cut in enumerate(cuts):
+        # cumulative input: earlier batches are resumed away
+        run_pipeline(spark, full.filter(F.col("conv_id") < cut),
+                     warehouse=warehouse, run_id=f"b{i}")
+    assert written == [(f"b{i}", "kg_canon") for i in range(len(cuts))]
+    assert sorted(os.listdir(warehouse)) == ["checkpoints", "kg_canon"]
+
+    canon = kgio.read_stage(spark, warehouse, "kg_canon")
+    ckpt = spark.read.parquet(os.path.join(warehouse, "checkpoints"))
+    assert ckpt.count() == len(cuts)
+    lo = ""
+    for i, cut in enumerate(cuts):
+        (row,) = ckpt.filter(F.col("run_id") == f"b{i}").collect()
+        assert row["stage"] == "kg_canon" and row["partition_id"] == -1
+        batch = canon.filter((F.col("conv_id") >= lo) & (F.col("conv_id") < cut))
+        assert row["row_count"] == batch.count() > 0
+        lo = cut
+
+    one_shot = run_pipeline(spark, full)
+    for name in ("kg_triples", "ontology_alignments"):
+        stored = kgio.read_stage(spark, warehouse, name)
+        assert stored.columns == one_shot[name].columns
+        assert Counter(stored.collect()) == Counter(one_shot[name].collect())
 
 
 def test_crash_resume_at_scale(spark, tmp_path):
     """North-rule crash consistency on a >= 100k-conversation corpus:
-    a run killed mid-stage — after its kg_canon append committed but
-    before the final output overwrite, with torn task files left under
-    the stage directory — must resume to a byte-identical store while
+    a run killed mid-write, with torn task files left under the
+    kg_canon directory, must resume to a byte-identical store while
     recomputing ONLY the conversations the store does not yet hold
     (recompute counts asserted from the checkpoint table's write-pass
     observations, not from re-scans)."""
-    import shutil
-
     warehouse = os.path.join(str(tmp_path), "wh")
     ref_wh = os.path.join(str(tmp_path), "wh_ref")
     n = 100_000
@@ -76,15 +119,10 @@ def test_crash_resume_at_scale(spark, tmp_path):
     cut2 = f"conv{85_000:08d}"
 
     # run 2 ("the crashed run"): commits kg_canon for its 85k
-    # conversations, then DIES before the final outputs — emulated by
-    # deleting the final-output stages it would have been rewriting
-    # (exactly the on-disk state a kill at that point leaves, since
-    # each write_stage is an atomic job commit)
+    # conversations (its only write, an atomic job commit), then DIES
+    # while a later append is in flight
     run_pipeline(spark, full.filter(F.col("conv_id") < cut2),
                  warehouse=warehouse, run_id="r2")
-    shutil.rmtree(os.path.join(warehouse, "kg_triples"))
-    shutil.rmtree(os.path.join(warehouse, "ontology_alignments"),
-                  ignore_errors=True)
     # torn-task debris: a killed IN-FLIGHT task attempt lives under the
     # nested attempt directory (_temporary/0/_temporary/attempt_*) — a
     # bare _temporary/0/task_* dir would mean the task had COMMITTED,

@@ -176,6 +176,56 @@ def test_stateful_session_assembly(spark, tmp_path):
     }
 
 
+@pytest.mark.parametrize("quiet_for_seconds", [0, 600])
+def test_micro_batch_plan_runs_once(spark, tmp_path, quiet_for_seconds):
+    """Each micro-batch's plan runs once although the body both checks
+    it for rows and feeds it to the pipeline: the query progress counts
+    every source row once and, gated, one state update per conversation
+    and batch. With no-data batches off, the gated run's third batch
+    both ingests convC and releases convA."""
+    in_dir = str(tmp_path / "turns")
+    warehouse, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
+    os.makedirs(in_dir)
+    drops = [
+        [turn("convA", 0, "Acme Corp employs Dana Fox.", 0),
+         turn("convA", 1, "Beta Inc employs Alice Reed.", 1)],
+        [turn("convB", 0, "Gamma LLC employs Bob Stone.", 60)],
+        [turn("convC", 0, "Delta Co employs Carl Ames.", 61)],
+    ]
+    stream = stream_conversations_from_files(spark, in_dir, CONVERSATIONS)
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        q = start_incremental_kg(
+            stream, warehouse, ckpt, trigger_seconds=0,
+            quiet_for_seconds=quiet_for_seconds,
+        )
+    finally:
+        spark.conf.unset(conf)
+    try:
+        for d in drops:
+            _drop(spark, d, in_dir)
+            q.processAllAvailable()
+        progress = q.recentProgress
+    finally:
+        q.stop()
+
+    assert sum(p["numInputRows"] for p in progress) == sum(map(len, drops))
+    gate = [
+        o for p in progress for o in p["stateOperators"]
+        if o["operatorName"] == "applyInPandasWithState"
+    ]
+    if quiet_for_seconds:
+        # convA, convB, convC each open a session once; convA's release
+        # removes it once
+        assert sum(o["numRowsUpdated"] for o in gate) == 3
+        assert sum(o["numRowsRemoved"] for o in gate) == 1
+        assert _canon_convs(spark, warehouse) == {"convA"}
+    else:
+        assert gate == []
+        assert _canon_convs(spark, warehouse) == {"convA", "convB", "convC"}
+
+
 @pytest.fixture(scope="module")
 def gated_restart(spark, tmp_path_factory):
     """One gated stream stopped mid-session and restarted from its
